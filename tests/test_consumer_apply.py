@@ -1,0 +1,274 @@
+"""Fast-tier checks of WalStreamConsumer._apply_batch: a checkpointed
+consumer applies ~640-record WAL files (ADD / UPDATE / DELETE / re-ADD)
+one per micro-batch to a 5k-row, 64-bucket target, and the test checks the
+state against a dict oracle, pins the Spark jobs and tasks each micro-batch
+costs, checks the target lands one file per touched bucket per version, and
+checks replay, callback, retry and warning behaviour."""
+
+from __future__ import annotations
+
+import os
+import random
+import re
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
+
+from wal_consumer_spark.streaming import (
+    BucketedParquetKeyValueTarget,
+    WalStreamConsumer,
+)
+
+N_BUCKETS = 64
+SEED_ROWS = 5_000
+N_FILES = 4
+PER_FILE = 640
+WAL_COLUMNS = ["id", "entity_id", "operation", "entity_bytes", "entity_type"]
+
+#: Spark jobs one micro-batch of this scenario runs (AQE submits each
+#: shuffle stage as its own job): the stats aggregate (3), Spark's parallel
+#: listing of the 64 bucket paths (1), the R10 count (4) and the write (5).
+JOBS_PER_BATCH = 13
+#: the tasks those jobs run under local[8] are 115 a batch, 64 of them the
+#: listing; caching the reduced batch pins every later job at
+#: spark.sql.shuffle.partitions tasks and roughly quadruples this
+MAX_TASKS_PER_BATCH = 120
+
+
+def _wal_files(rng: random.Random, keys: list[int]) -> list[list[tuple]]:
+    """WAL records (id, entity_id, operation, payload): upserts of live
+    keys, deletes, re-ADDs of deleted keys and ADDs of new keys. Payloads
+    are unique per record, so the R10 payload comparison is exact."""
+    live, dead = set(keys), set()
+    next_key, next_id, files = max(keys) + 1, 1, []
+    for _ in range(N_FILES):
+        recs = []
+        for _ in range(PER_FILE):
+            r = rng.random()
+            if r < 0.1 and live:
+                k, op = rng.choice(sorted(live)), "DELETE"
+                live.discard(k)
+                dead.add(k)
+            elif r < 0.2 and dead:
+                k, op = rng.choice(sorted(dead)), "ADD"
+                dead.discard(k)
+                live.add(k)
+            elif r < 0.35:
+                k, op, next_key = next_key, "ADD", next_key + 1
+                live.add(k)
+            else:
+                k, op = rng.choice(sorted(live)), "UPDATE"
+            payload = None if op == "DELETE" else f"{next_id}:{k}".encode()
+            recs.append((next_id, k, op, payload))
+            next_id += 1
+        files.append(recs)
+    return files
+
+
+def _apply(state: dict, records: list[tuple]) -> int:
+    """Dict-oracle apply of one micro-batch (last op per key, by id);
+    returns how many of its upserts the state already held."""
+    last = {}
+    for rec in sorted(records):
+        last[rec[1]] = rec
+    already = 0
+    for _, k, op, payload in last.values():
+        if op == "DELETE":
+            state.pop(k, None)
+        else:
+            already += state.get(k) == payload
+            state[k] = payload
+    return already
+
+
+def _write_wal(path: str, records: list[tuple], mtime: int) -> None:
+    ids, keys, ops, payloads = zip(*records)
+    pq.write_table(
+        pa.table(
+            {
+                "id": pa.array(ids, pa.int64()),
+                "entity_id": pa.array(keys, pa.int64()),
+                "operation": pa.array(ops, pa.string()),
+                "entity_bytes": pa.array(payloads, pa.binary()),
+                "entity_type": pa.array(["T"] * len(ids), pa.string()),
+            }
+        ),
+        path,
+    )
+    os.utime(path, (mtime, mtime))  # the file source reads oldest first
+
+
+def _state(target) -> dict:
+    return {r.entity_id: bytes(r.entity_bytes) for r in target.read().collect()}
+
+
+def _drain(consumer) -> str:
+    query = consumer.start(available_now=True)
+    try:
+        query.awaitTermination()
+    finally:
+        consumer.close()
+    return str(query.runId)
+
+
+@pytest.fixture(scope="module")
+def applied(spark, tmp_path_factory):
+    """One checkpointed drain of the WAL files into a seeded target."""
+    root = str(tmp_path_factory.mktemp("consumer_apply"))
+    rng = random.Random(7)
+    keys = rng.sample(range(1, 50_000), SEED_ROWS)
+    initial = {k: f"seed:{k}".encode() for k in keys}
+    seed_file = f"{root}/seed.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "entity_id": pa.array(keys, pa.int64()),
+                "entity_bytes": pa.array([initial[k] for k in keys], pa.binary()),
+                "entity_type": pa.array(["T"] * len(keys), pa.string()),
+            }
+        ),
+        seed_file,
+    )
+    target = BucketedParquetKeyValueTarget(spark, f"{root}/target", n_buckets=N_BUCKETS)
+    target.write(spark.read.parquet(seed_file))
+
+    files = _wal_files(rng, keys)
+    os.makedirs(f"{root}/wal")
+    for i, recs in enumerate(files):
+        _write_wal(f"{root}/wal/part-{i:04d}.parquet", recs, 1_700_000_000 + i)
+    consumer = WalStreamConsumer(
+        spark, f"{root}/wal", f"{root}/ckpt", target, max_files_per_trigger=1
+    )
+    run_id = _drain(consumer)
+    return {
+        "root": root, "target": target, "initial": initial, "files": files,
+        "consumer": consumer, "run_id": run_id,
+    }
+
+
+def test_state_matches_dict_oracle(applied):
+    expected = dict(applied["initial"])
+    for recs in applied["files"]:
+        _apply(expected, recs)
+    assert _state(applied["target"]) == expected
+    m = applied["consumer"].metrics
+    assert m.num_ignored_already_done == 0
+    assert m.num_synchronized == sum(len({r[1] for r in recs}) for recs in applied["files"])
+
+
+def test_jobs_and_tasks_per_batch_are_pinned(spark, applied):
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    job_ids = list(sc.statusTracker().getJobIdsForGroup(applied["run_id"]))
+    tasks = sum(store.job(j).numTasks() for j in job_ids)
+    assert len(job_ids) == JOBS_PER_BATCH * N_FILES, job_ids
+    assert tasks <= MAX_TASKS_PER_BATCH * N_FILES, tasks
+
+
+def test_one_file_per_touched_bucket_per_version(spark, applied):
+    target, root = applied["target"], applied["root"]
+    # v1 is the seeding write; the consumer's batches wrote v2..v5
+    for i in range(1 + N_FILES):
+        vdir = f"{root}/target/v{i + 1}"
+        buckets = [b for b in os.listdir(vdir) if b.startswith("__bucket=")]
+        for b in buckets:
+            data = [n for n in os.listdir(f"{vdir}/{b}") if n.endswith(".parquet")]
+            assert len(data) == 1, (vdir, b, data)
+        if i:
+            wal = spark.read.parquet(f"{root}/wal/part-{i - 1:04d}.parquet")
+            assert len(buckets) == len(target.touched_buckets(wal))
+    assert len(buckets) == N_BUCKETS  # 640 records touch every bucket
+
+
+def test_metrics_report_the_last_batch(applied):
+    d = applied["consumer"].metrics.as_dict()
+    assert d["wal_last_batch_records"] == len({r[1] for r in applied["files"][-1]})
+    assert d["wal_last_batch_touched_buckets"] == N_BUCKETS
+    assert d["wal_last_batch_apply_seconds"] > 0
+
+
+def test_replay_with_fresh_checkpoint_counts_already_done(spark, applied):
+    """R10: replaying every WAL file over the final state re-applies each
+    batch; the upserts whose payload the state already holds at that point
+    count as already done, and the state ends where it was."""
+    target, root = applied["target"], applied["root"]
+    expected = _state(target)
+    already = 0
+    for recs in applied["files"]:
+        already += _apply(expected, recs)
+    assert already > 0
+    replay = WalStreamConsumer(
+        spark, f"{root}/wal", f"{root}/ckpt_replay", target, max_files_per_trigger=1
+    )
+    _drain(replay)
+    total = sum(len({r[1] for r in recs}) for recs in applied["files"])
+    assert replay.metrics.num_ignored_already_done == already
+    assert replay.metrics.num_synchronized == total - already
+    assert _state(target) == expected
+
+
+def _batch(spark, records):
+    return spark.createDataFrame(
+        [(i, k, op, p, "T") for i, k, op, p in records],
+        "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, entity_type STRING",
+    )
+
+
+def test_callback_false_sees_wal_columns_only(spark, tmp_path):
+    seen = []
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=N_BUCKETS)
+    consumer = WalStreamConsumer(
+        spark, str(tmp_path / "wal"), str(tmp_path / "ckpt"), target,
+        callback=lambda b: seen.append(b.columns) or False,
+    )
+    consumer._apply_batch(
+        _batch(spark, [(1, 1, "ADD", b"a"), (2, 2, "ADD", b"b"), (3, 1, "UPDATE", b"c")]), 0
+    )
+    assert seen == [WAL_COLUMNS]
+    assert consumer.metrics.num_ignored_already_done == 2
+    assert consumer.metrics.num_synchronized == 0
+    assert _state(target) == {}
+
+
+def test_io_errors_retry_and_analysis_errors_fail_fast(spark, tmp_path):
+    """R9: an IO error is retried until the apply succeeds; an
+    AnalysisException (a schema or plan bug no retry can fix) is raised at
+    once even with unbounded retries, and counted as a failure."""
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=N_BUCKETS)
+    left = {"io": 2, "bad": 0}
+
+    def callback(batch):
+        if left["io"]:
+            left["io"] -= 1
+            raise OSError("sink unavailable")
+        if left["bad"]:
+            left["bad"] -= 1
+            batch.select("no_such_column")
+        return True
+
+    consumer = WalStreamConsumer(
+        spark, str(tmp_path / "wal"), str(tmp_path / "ckpt"), target,
+        callback=callback, sleep_on_io_failure=0.0, max_sync_retries=None,
+    )
+    consumer._apply_batch(_batch(spark, [(1, 1, "ADD", b"a")]), 0)
+    assert consumer.metrics.num_io_failures == 2
+    assert _state(target) == {1: b"a"}
+
+    left["bad"] = 1  # a retry would find the callback healed and apply
+    with pytest.raises(AnalysisException):
+        consumer._apply_batch(_batch(spark, [(2, 2, "ADD", b"b")]), 1)
+    assert left["bad"] == 0
+    assert consumer.metrics.num_io_failures == 3
+    assert _state(target) == {1: b"a"}
+
+
+def test_failed_applied_id_write_warns(spark, tmp_path):
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"))
+    consumer = WalStreamConsumer(spark, str(tmp_path / "wal"), str(blocker), target)
+    with pytest.warns(RuntimeWarning, match=re.escape(f"{blocker}/_wcs_applied_id")):
+        consumer._record_applied(7)
+    assert consumer._last_applied_id == 7

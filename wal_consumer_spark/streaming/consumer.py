@@ -8,15 +8,18 @@ re-expressed on Structured Streaming. Semantic mapping (SURVEY.md §2.A):
                           claim maps to restart supervision)
 - R5  callback         -> foreachBatch(apply); the callback receives the
                           per-key-reduced batch and applies it to the target
-- R6-R8 ADD/UPDATE/DELETE -> apply_cdc_batch merge semantics
+- R6-R8 ADD/UPDATE/DELETE -> apply_cdc_batch merge semantics (left-anti
+      join of the target slice on the batch's keys, plus its upserts)
 - R9  retry forever on IO failure (WalConsumer.java:259-269) -> retry loop
-      inside foreachBatch with `sleep_on_io_failure` between attempts
-- R10 idempotent-skip accounting (WalConsumer.java:271-278) -> pre-apply
-      anti-diff against the target counts records whose payload is already
-      present
+      inside foreachBatch with `sleep_on_io_failure` between attempts; an
+      AnalysisException (a schema or plan bug) fails the batch at once
+- R10 idempotent-skip accounting (WalConsumer.java:271-278) -> a join of the
+      batch's upserts against the pre-apply target slice counts records
+      whose payload is already present
 - R11 exactly-once advance (WalHeadHandle.java:29-42) -> the batch commits
       to the checkpoint only after foreachBatch returns; a failure replays
-      the whole batch (at-least-once, idempotent by R10)
+      the whole batch (at-least-once, idempotent by R10); the target commits
+      its own manifest last, so a replay re-applies against the old state
 - R12 empty-poll sleep (WalConsumer.java:150-154) -> processingTime trigger
 - R13 source-failure backoff (WalConsumer.java:136-142) -> start_supervised:
       query termination with an exception flips the state gauge to
@@ -31,17 +34,29 @@ Ordering (SURVEY.md §4.3): per-`entity_id` order is guaranteed — each batch
 reduces to the last op per key by `id`, and files are consumed oldest-first
 so later batches only carry larger ids. `strict_global_order=True` degrades
 to a single partition for full-fidelity sequential apply.
+
+Spark actions per micro-batch: one aggregate over the reduced batch (record
+count, max `id`, touched buckets), the R10 count, and the target write
+(plus Spark's parallel file listing when the target slice spans more than
+`spark.sql.sources.parallelPartitionDiscovery.threshold` bucket paths). The
+reduced batch is not cached: a cached plan keeps its
+`spark.sql.shuffle.partitions` output partitioning, which AQE cannot
+coalesce, so every later job would run that many tasks; recomputing the
+reduce from the batch's few WAL files costs less.
 """
 
 from __future__ import annotations
 
 import time
+import warnings
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wal_consumer_spark.operators.cdc import apply_cdc_batch, last_op_per_key
+from wal_consumer_spark.operators.cdc import TARGET_COLS, last_op_per_key
+from wal_consumer_spark.schema import Operation
 from wal_consumer_spark.sources.wal_source import read_wal_stream
 from wal_consumer_spark.streaming.metrics import ConsumerMetrics, WalQueryListener, WalState
 
@@ -84,10 +99,19 @@ class ParquetKeyValueTarget:
         except Exception:
             return self.spark.createDataFrame([], TARGET_SCHEMA)
 
-    def read_for(self, batch: DataFrame) -> DataFrame:
+    def bucket_expr(self) -> Column:
+        """The whole state is one bucket."""
+        return F.lit(0)
+
+    def read_for(self, batch: DataFrame, touched: list[int] | None = None) -> DataFrame:
         """State slice that could contain the batch's keys (whole state
         here; bucket-pruned in BucketedParquetKeyValueTarget)."""
         return self.read()
+
+    def write_for(
+        self, new_state: DataFrame, batch: DataFrame, touched: list[int] | None = None
+    ) -> None:
+        self.write(new_state)
 
     def write(self, df: DataFrame) -> None:
         self._version += 1
@@ -104,7 +128,10 @@ class BucketedParquetKeyValueTarget:
     Commit protocol on plain parquet (no table format available):
 
     - each write lands every touched bucket under a fresh version dir
-      ``v<n>/__bucket=<b>/``, never mutating prior versions;
+      ``v<n>/__bucket=<b>/``, never mutating prior versions; the write is
+      rebalanced on the bucket, so a version holds one file per touched
+      bucket (AQE splits a bucket only past its advisory partition size)
+      and a full read opens one file per bucket;
     - a manifest (bucket -> version) is swapped in atomically LAST
       (os.replace), so a crash mid-write leaves the previous manifest — and
       thus the previous consistent state — intact, mirroring the atomic
@@ -149,10 +176,11 @@ class BucketedParquetKeyValueTarget:
 
     # -- bucketing ---------------------------------------------------------
 
+    def bucket_expr(self) -> Column:
+        return F.pmod(F.hash("entity_id"), F.lit(self.n_buckets))
+
     def _bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "__bucket", F.pmod(F.hash("entity_id"), F.lit(self.n_buckets))
-        )
+        return df.withColumn("__bucket", self.bucket_expr())
 
     def _read_buckets(self, manifest: dict[str, int], buckets: list[int]) -> DataFrame:
         import os
@@ -225,6 +253,7 @@ class BucketedParquetKeyValueTarget:
         vdir = f"{self.path}/v{version}"
         (
             self._bucket(df)
+            .hint("rebalance", "__bucket")
             .write.partitionBy("__bucket")
             .mode("overwrite")
             .parquet(vdir)
@@ -284,7 +313,7 @@ class WalStreamConsumer:
         spark: SparkSession,
         wal_dir: str,
         checkpoint_dir: str,
-        target: ParquetKeyValueTarget,
+        target: ParquetKeyValueTarget | BucketedParquetKeyValueTarget,
         callback: Callable[[DataFrame], bool] | None = None,
         trigger_interval: str = "1 second",
         sleep_on_io_failure: float = 1.0,
@@ -312,102 +341,99 @@ class WalStreamConsumer:
     # -- the foreachBatch body: ordered apply with retry + idempotency -----
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        t0 = time.monotonic()
+        if self.strict_global_order:
+            batch_df = batch_df.repartition(1).sortWithinPartitions("id")
+        reduced = last_op_per_key(batch_df)
+        # the batch's one stats action; the last-op reduction keeps each
+        # key's max id, so max(id) equals the raw batch's
+        n_batch, max_id, touched = reduced.agg(
+            F.count(F.lit(1)), F.max("id"), F.collect_set(self.target.bucket_expr())
+        ).first()
+        if n_batch == 0:
             self.metrics.set_state(WalState.EMPTY)
             return
         self.metrics.set_state(WalState.NOT_EMPTY)
-        if self.strict_global_order:
-            batch_df = batch_df.repartition(1).sortWithinPartitions("id")
+        touched = sorted(touched)
 
-        reduced = last_op_per_key(batch_df).persist()
-        try:
-            n_batch = reduced.count()
-            # bucketed targets read only the state slice the batch can touch;
-            # the touched-bucket list is computed ONCE and shared with the
-            # write below (each computation is a distinct+collect Spark job)
-            tb_fn = getattr(self.target, "touched_buckets", None)
-            touched = tb_fn(reduced) if tb_fn is not None else None
-            if touched is not None:
-                current = self.target.read_for(reduced, touched)
-            else:
-                current = self.target.read_for(reduced)
-            # R10: upserts whose payload is already in the target were applied
-            # before a replay -> count as ignored_already_done.
-            already = (
-                reduced.filter(F.col("operation") != "DELETE")
-                .join(
-                    current.select(
-                        "entity_id", F.col("entity_bytes").alias("__tgt_bytes")
-                    ),
-                    "entity_id",
-                )
-                .filter(F.col("entity_bytes") == F.col("__tgt_bytes"))
-                .count()
-            )
+        # bucketed targets read only the state slice the batch can touch
+        current = self.target.read_for(reduced, touched)
+        upserts = reduced.filter(F.col("operation") != Operation.DELETE)
+        new_state = current.join(
+            reduced.select("entity_id"), "entity_id", "left_anti"
+        ).unionByName(upserts.select(*TARGET_COLS))
 
-            attempt = 0
-            while True:  # R9: retry forever (bounded only if configured)
-                try:
-                    if self.callback is not None and not self.callback(reduced):
-                        # callback returning False == "was already done"
-                        # (WalEntityConsumerCallback.java:10-17)
-                        self.metrics.num_ignored_already_done += n_batch
-                        self._record_applied(reduced)
-                        return
-                    new_state = apply_cdc_batch(current, reduced)
-                    write_for = getattr(self.target, "write_for", None)
-                    if write_for is not None:
-                        # rewrite only the batch's buckets (incremental)
-                        if touched is not None:
-                            write_for(new_state, reduced, touched)
-                        else:
-                            write_for(new_state, reduced)
-                    else:
-                        self.target.write(new_state)
+        already = None
+        attempt = 0
+        while True:  # R9: retry IO failures forever (bounded only if configured)
+            try:
+                if self.callback is not None and not self.callback(reduced):
+                    # callback returning False == "was already done"
+                    # (WalEntityConsumerCallback.java:10-17)
+                    already = n_batch
                     break
-                except InterruptedError:
+                if already is None:
+                    # R10: upserts whose payload is already in the target
+                    # were applied before a replay
+                    already = (
+                        upserts.join(
+                            current.select(
+                                "entity_id", F.col("entity_bytes").alias("__tgt_bytes")
+                            ),
+                            "entity_id",
+                        )
+                        .filter(F.col("entity_bytes") == F.col("__tgt_bytes"))
+                        .count()
+                    )
+                self.target.write_for(new_state, reduced, touched)
+                break
+            except InterruptedError:
+                raise
+            except Exception as e:
+                self.metrics.num_io_failures += 1
+                attempt += 1
+                # an AnalysisException is a schema or plan bug: no retry can fix it
+                if isinstance(e, AnalysisException) or (
+                    self.max_sync_retries is not None
+                    and attempt > self.max_sync_retries
+                ):
                     raise
-                except Exception:
-                    self.metrics.num_io_failures += 1
-                    attempt += 1
-                    if (
-                        self.max_sync_retries is not None
-                        and attempt > self.max_sync_retries
-                    ):
-                        raise
-                    time.sleep(self.sleep_on_io_failure)
+                time.sleep(self.sleep_on_io_failure)
 
-            self.metrics.num_ignored_already_done += already
-            self.metrics.num_synchronized += n_batch - already
-            self._record_applied(reduced)
-        finally:
-            reduced.unpersist()
+        m = self.metrics
+        m.num_ignored_already_done += already
+        m.num_synchronized += n_batch - already
+        self._record_applied(max_id)
+        m.last_batch_records, m.last_batch_touched_buckets = n_batch, len(touched)
+        m.last_batch_apply_seconds = time.monotonic() - t0
 
     def _applied_id_path(self) -> str:
         return f"{self.checkpoint_dir}/_wcs_applied_id"
 
-    def _record_applied(self, reduced: DataFrame) -> None:
-        """Advance the applied-id high-water mark (the batch's max id — the
-        last-op-per-key reduction keeps each key's max id, so its global max
-        equals the raw batch's), persist it next to the checkpoint so a
-        RESTARTED consumer doesn't over-report the backlog (the checkpoint
-        skips already-consumed files, so the mark can never be relearned
-        from processed data), and invalidate the backlog cache."""
+    def _record_applied(self, max_id: int) -> None:
+        """Advance the applied-id high-water mark to the batch's max id,
+        persist it next to the checkpoint so a RESTARTED consumer doesn't
+        over-report the backlog (the checkpoint skips already-consumed
+        files, so the mark can never be relearned from processed data), and
+        invalidate the backlog cache. A failed persist only costs the
+        gauge's accuracy after a restart, so it warns instead of failing the
+        batch."""
         import os
 
-        max_id = reduced.agg(F.max("id")).collect()[0][0]
-        if max_id is not None and (
-            self._last_applied_id is None or max_id > self._last_applied_id
-        ):
+        if self._last_applied_id is None or max_id > self._last_applied_id:
             self._last_applied_id = max_id
+            path = self._applied_id_path()
             try:
                 os.makedirs(self.checkpoint_dir, exist_ok=True)
-                tmp = f"{self._applied_id_path()}.tmp"
-                with open(tmp, "w", encoding="utf-8") as f:
+                with open(f"{path}.tmp", "w", encoding="utf-8") as f:
                     f.write(str(max_id))
-                os.replace(tmp, self._applied_id_path())
-            except OSError:
-                pass  # gauge durability is best-effort; correctness unaffected
+                os.replace(f"{path}.tmp", path)
+            except OSError as e:
+                warnings.warn(
+                    f"could not persist the applied-id mark to {path}: {e}",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
         self._backlog_cache = None
 
     def _load_applied_id(self) -> None:

@@ -33,6 +33,11 @@ class ConsumerMetrics:
     num_ignored_already_done: int = 0
     num_io_failures: int = 0
     backlog: int = 0
+    #: the last applied micro-batch: reduced records, touched buckets and
+    #: apply wall time, from the consumer's per-batch aggregate
+    last_batch_records: int = 0
+    last_batch_touched_buckets: int = 0
+    last_batch_apply_seconds: float = 0.0
     _not_empty_since: float | None = field(default=None, repr=False)
     _not_empty_accum: float = field(default=0.0, repr=False)
 
@@ -62,6 +67,9 @@ class ConsumerMetrics:
             f"{p}_num_ignored_already_done": self.num_ignored_already_done,
             f"{p}_num_io_failures": self.num_io_failures,
             f"{p}_not_empty_seconds": self.not_empty_seconds,
+            f"{p}_last_batch_records": self.last_batch_records,
+            f"{p}_last_batch_touched_buckets": self.last_batch_touched_buckets,
+            f"{p}_last_batch_apply_seconds": self.last_batch_apply_seconds,
         }
 
 
