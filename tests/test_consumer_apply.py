@@ -3,7 +3,8 @@ consumer applies ~640-record WAL files (ADD / UPDATE / DELETE / re-ADD)
 one per micro-batch to a 5k-row, 64-bucket target, and the test checks the
 state against a dict oracle, pins the Spark jobs and tasks each micro-batch
 costs, checks the target lands one file per touched bucket per version, and
-checks replay, callback, retry and warning behaviour."""
+checks replay, callback, retry and warning behaviour, type routing across
+restarts and single-consumer exclusion."""
 
 from __future__ import annotations
 
@@ -20,12 +21,14 @@ from wal_consumer_spark.streaming import (
     BucketedParquetKeyValueTarget,
     WalStreamConsumer,
 )
+from wal_consumer_spark.streaming.routing import TypeRoutedTarget
 
 N_BUCKETS = 64
 SEED_ROWS = 5_000
 N_FILES = 4
 PER_FILE = 640
 WAL_COLUMNS = ["id", "entity_id", "operation", "entity_bytes", "entity_type"]
+WAL_SCHEMA = "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, entity_type STRING"
 
 #: Spark jobs one micro-batch of this scenario runs (AQE submits each
 #: shuffle stage as its own job): the stats aggregate (3), Spark's parallel
@@ -210,10 +213,7 @@ def test_replay_with_fresh_checkpoint_counts_already_done(spark, applied):
 
 
 def _batch(spark, records):
-    return spark.createDataFrame(
-        [(i, k, op, p, "T") for i, k, op, p in records],
-        "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, entity_type STRING",
-    )
+    return spark.createDataFrame([(i, k, op, p, "T") for i, k, op, p in records], WAL_SCHEMA)
 
 
 def test_callback_false_sees_wal_columns_only(spark, tmp_path):
@@ -272,3 +272,51 @@ def test_failed_applied_id_write_warns(spark, tmp_path):
     with pytest.warns(RuntimeWarning, match=re.escape(f"{blocker}/_wcs_applied_id")):
         consumer._record_applied(7)
     assert consumer._last_applied_id == 7
+
+
+def test_routed_state_survives_restarted_routers(spark, tmp_path):
+    """Each routed batch goes through a fresh TypeRoutedTarget on the same
+    base path, as after a process restart: every type's state equals a dict
+    oracle, and a fresh router lists every type. `account` reuses
+    entity_id 1 of `user`."""
+    base = str(tmp_path / "routed")
+    batches = [
+        [
+            (1, 1, "ADD", b"u1", "user"),
+            (2, 2, "ADD", b"u2", "user"),
+            (3, 1, "ADD", b"a1", "account"),
+        ],
+        [(4, 3, "ADD", b"u3", "user")],
+        [(5, 3, "UPDATE", b"u3b", "user")],
+    ]
+    oracle: dict[str, dict] = {}
+    for records in batches:
+        router = TypeRoutedTarget(spark, base)
+        router.apply_batch(spark.createDataFrame(records, WAL_SCHEMA))
+        for etype in {r[4] for r in records}:
+            _apply(oracle.setdefault(etype, {}), [r[:4] for r in records if r[4] == etype])
+    assert oracle == {"user": {1: b"u1", 2: b"u2", 3: b"u3b"}, "account": {1: b"a1"}}
+    # the router that applied the last batch, then one that applied nothing
+    assert {t: _state(router.target_for(t)) for t in oracle} == oracle
+    restarted = TypeRoutedTarget(spark, base)
+    assert restarted.types() == ["account", "user"]
+    assert {t: _state(restarted.target_for(t)) for t in restarted.types()} == oracle
+
+
+def test_second_consumer_on_an_active_checkpoint_fails_fast(spark, tmp_path):
+    """R2-R4 in one process: while a consumer's query is active on a
+    checkpoint, a second consumer on that checkpoint fails at start()."""
+    wal, ckpt = str(tmp_path / "wal"), str(tmp_path / "ckpt")
+    os.makedirs(wal)
+    _write_wal(f"{wal}/part-0000.parquet", [(1, 1, "ADD", b"a")], 1_700_000_000)
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"))
+    first = WalStreamConsumer(spark, wal, ckpt, target)
+    second = WalStreamConsumer(spark, wal, ckpt, target)
+    first.start()
+    try:
+        with pytest.raises(RuntimeError, match="another WalStreamConsumer is active"):
+            second.start()
+        assert second.query is None
+    finally:
+        first.close()
+        second.close()

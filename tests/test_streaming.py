@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from wal_consumer_spark.streaming import ParquetKeyValueTarget, WalStreamConsumer
+from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget, WalStreamConsumer
 
 WAL_COLS = "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, entity_type STRING"
 
@@ -43,14 +43,15 @@ def _drain(consumer):
 
 def test_reference_scenario_end_to_end(spark, tmp_path):
     """ADD -> UPDATE -> DELETE sequence consumed via the streaming path
-    converges to the dict-oracle state (WalConsumerTest.java:113-127)."""
+    converges to the dict-oracle state (WalConsumerTest.java:113-127),
+    across two checkpointed consumption rounds."""
     wal, ckpt, tgt = str(tmp_path / "wal"), str(tmp_path / "ckpt"), str(tmp_path / "tgt")
     next_id = _write_wal_file(
         spark, wal,
         [(1, "ADD", "a1"), (2, "ADD", "b1"), (1, "UPDATE", "a2"), (3, "ADD", "c1")],
         start_id=1,
     )
-    target = ParquetKeyValueTarget(spark, tgt)
+    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
     c = WalStreamConsumer(spark, wal, ckpt, target)
     _drain(c)
     assert _state(target) == {1: "a2", 2: "b1", 3: "c1"}
@@ -72,7 +73,7 @@ def test_replay_counts_already_done(spark, tmp_path):
     (WalConsumer.java:271-278)."""
     wal, tgt = str(tmp_path / "wal"), str(tmp_path / "tgt")
     _write_wal_file(spark, wal, [(1, "ADD", "a1"), (2, "ADD", "b1")], start_id=1)
-    target = ParquetKeyValueTarget(spark, tgt)
+    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
     c = WalStreamConsumer(spark, wal, str(tmp_path / "ckpt1"), target)
     _drain(c)
     assert c.metrics.num_synchronized == 2
@@ -89,7 +90,7 @@ def test_io_failure_retries_until_success(spark, tmp_path):
     until it succeeds; the record is not lost (WalConsumer.java:259-269)."""
     wal, tgt = str(tmp_path / "wal"), str(tmp_path / "tgt")
     _write_wal_file(spark, wal, [(1, "ADD", "a1")], start_id=1)
-    target = ParquetKeyValueTarget(spark, tgt)
+    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
     failures = {"left": 2}
 
     def flaky_callback(batch_df):
@@ -114,7 +115,7 @@ def test_callback_false_means_already_done(spark, tmp_path):
     the batch advances without re-applying."""
     wal, tgt = str(tmp_path / "wal"), str(tmp_path / "tgt")
     _write_wal_file(spark, wal, [(1, "ADD", "a1")], start_id=1)
-    target = ParquetKeyValueTarget(spark, tgt)
+    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
     c = WalStreamConsumer(
         spark, wal, str(tmp_path / "ckpt"), target, callback=lambda b: False
     )
@@ -123,17 +124,17 @@ def test_callback_false_means_already_done(spark, tmp_path):
     assert c.metrics.num_ignored_already_done == 1
 
 
-def test_strict_global_order_mode(spark, tmp_path):
-    """SURVEY.md §4.3 degraded mode: single-partition sequential apply still
-    converges identically."""
+def test_add_update_delete_readd_one_key(spark, tmp_path):
+    """SURVEY.md §4.3: four ops on one key in one batch reduce to the last
+    op by id, so a DELETE followed by a re-ADD leaves the re-ADD."""
     wal, tgt = str(tmp_path / "wal"), str(tmp_path / "tgt")
     _write_wal_file(
         spark, wal,
         [(1, "ADD", "x1"), (1, "UPDATE", "x2"), (1, "DELETE", None), (1, "ADD", "x3")],
         start_id=1,
     )
-    target = ParquetKeyValueTarget(spark, tgt)
-    c = WalStreamConsumer(spark, wal, str(tmp_path / "ckpt"), target, strict_global_order=True)
+    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
+    c = WalStreamConsumer(spark, wal, str(tmp_path / "ckpt"), target)
     _drain(c)
     assert _state(target) == {1: "x3"}
 
@@ -243,31 +244,6 @@ def test_type_routed_targets(spark, tmp_path):
     assert routed.types() == ["account", "user"]
 
 
-def test_bucketed_target_reference_scenario(spark, tmp_path):
-    """The incremental bucketed target converges to the same state as the
-    whole-rewrite target under the reference ADD/UPDATE/DELETE scenario,
-    across two checkpointed consumption rounds."""
-    from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget
-
-    wal, ckpt, tgt = str(tmp_path / "wal"), str(tmp_path / "ckpt"), str(tmp_path / "tgt")
-    next_id = _write_wal_file(
-        spark, wal,
-        [(1, "ADD", "a1"), (2, "ADD", "b1"), (1, "UPDATE", "a2"), (3, "ADD", "c1")],
-        start_id=1,
-    )
-    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
-    c = WalStreamConsumer(spark, wal, ckpt, target)
-    _drain(c)
-    assert _state(target) == {1: "a2", 2: "b1", 3: "c1"}
-    assert c.metrics.num_synchronized == 3
-
-    _write_wal_file(spark, wal, [(2, "DELETE", None), (4, "ADD", "d1")], start_id=next_id)
-    c2 = WalStreamConsumer(spark, wal, ckpt, target)
-    _drain(c2)
-    assert _state(target) == {1: "a2", 3: "c1", 4: "d1"}
-    assert c2.metrics.num_synchronized == 2
-
-
 def test_bucketed_target_rewrites_only_touched_buckets(spark, tmp_path):
     """The scale property behind BucketedParquetKeyValueTarget: a batch
     touching one key re-versions only that key's bucket — every other
@@ -275,7 +251,6 @@ def test_bucketed_target_rewrites_only_touched_buckets(spark, tmp_path):
     'What's wrong' #4; reference delete+commit WalHeadHandle.java:29-42)."""
     import glob
 
-    from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget
     from wal_consumer_spark.operators.cdc import last_op_per_key, apply_cdc_batch
 
     tgt = str(tmp_path / "tgt")
@@ -317,7 +292,7 @@ def test_backlog_gauge_counts_unconsumed_records(spark, tmp_path):
     next_id = _write_wal_file(
         spark, wal, [(1, "ADD", "a1"), (2, "ADD", "b1")], start_id=1
     )
-    target = ParquetKeyValueTarget(spark, tgt)
+    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
     c = WalStreamConsumer(spark, wal, str(tmp_path / "ckpt"), target)
     _drain(c)
     assert c.backlog(max_age=0) == 0
@@ -353,7 +328,7 @@ def test_source_failure_backoff_and_recovery(spark, tmp_path):
         spark,
         wal,
         ckpt,
-        ParquetKeyValueTarget(spark, tgt),
+        BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8),
         trigger_interval="1 second",
         sleep_on_io_failure=0.3,
     )
@@ -409,7 +384,7 @@ def test_cross_process_lock_sentinel(spark, tmp_path):
 
     wal, ckpt, tgt = str(tmp_path / "wal"), str(tmp_path / "ckpt"), str(tmp_path / "tgt")
     _write_wal_file(spark, wal, [(1, "ADD", "a1")], start_id=1)
-    c1 = WalStreamConsumer(spark, wal, ckpt, ParquetKeyValueTarget(spark, tgt))
+    c1 = WalStreamConsumer(spark, wal, ckpt, BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8))
     c1.start()
     try:
         # simulate a different process: wipe the in-process registry so only
@@ -429,7 +404,7 @@ def test_cross_process_lock_sentinel(spark, tmp_path):
         consumer_mod._pid_alive = fake_alive
         try:
             c2 = WalStreamConsumer(
-                spark, wal, ckpt, ParquetKeyValueTarget(spark, tgt)
+                spark, wal, ckpt, BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
             )
             import pytest
 
@@ -439,7 +414,10 @@ def test_cross_process_lock_sentinel(spark, tmp_path):
             consumer_mod._pid_alive = orig_alive
         # dead-owner sentinel: with the real liveness check, pid 999999999
         # is dead -> the lock is broken and the consumer takes over.
-        c3 = WalStreamConsumer(spark, wal, str(tmp_path / "ckpt2"), ParquetKeyValueTarget(spark, tgt))
+        c3 = WalStreamConsumer(
+            spark, wal, str(tmp_path / "ckpt2"),
+            BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8),
+        )
         os.makedirs(f"{tmp_path}/ckpt2", exist_ok=True)
         with open(f"{tmp_path}/ckpt2/_wcs_lock", "w", encoding="utf-8") as f:
             f.write("999999999")
@@ -459,7 +437,6 @@ def test_bucketed_target_replay_after_crash_no_duplicates(spark, tmp_path):
     OVERWRITE the partial attempt, not append to it, or every row of the
     first attempt is duplicated in the committed state."""
     from wal_consumer_spark.operators.cdc import apply_cdc_batch, last_op_per_key
-    from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget
 
     tgt = str(tmp_path / "tgt")
     target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=4)
@@ -530,12 +507,14 @@ def test_backlog_gauge_survives_restart(spark, tmp_path):
     backlog 0 instead of re-counting every already-consumed record."""
     wal, ckpt, tgt = str(tmp_path / "wal"), str(tmp_path / "ckpt"), str(tmp_path / "tgt")
     _write_wal_file(spark, wal, [(1, "ADD", "a1"), (2, "ADD", "b1")], start_id=1)
-    target = ParquetKeyValueTarget(spark, tgt)
+    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
     c = WalStreamConsumer(spark, wal, ckpt, target)
     _drain(c)
     assert c.backlog(max_age=0) == 0
 
-    restarted = WalStreamConsumer(spark, wal, ckpt, ParquetKeyValueTarget(spark, tgt))
+    restarted = WalStreamConsumer(
+        spark, wal, ckpt, BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
+    )
     assert restarted.backlog(max_age=0) == 0  # NOT 2
     _write_wal_file(spark, wal, [(3, "ADD", "c1")], start_id=3)
     assert restarted.backlog(max_age=0) == 1
@@ -548,7 +527,6 @@ def test_bucketed_target_gc_removes_only_unreferenced_versions(spark, tmp_path):
     import os
 
     from wal_consumer_spark.operators.cdc import apply_cdc_batch, last_op_per_key
-    from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget
 
     target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=4)
     for step in range(3):  # three writes to the same key: two dead versions
@@ -613,7 +591,7 @@ def test_max_files_per_trigger_drains_in_bounded_batches(spark, tmp_path):
         next_id = _write_wal_file(
             spark, wal, [(10 + i, "ADD", f"v{i}")], start_id=next_id
         )
-    target = ParquetKeyValueTarget(spark, tgt)
+    target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
     batches = []
     c = WalStreamConsumer(
         spark, wal, ckpt, target, max_files_per_trigger=1,
@@ -635,7 +613,6 @@ def test_soak_20_batches_consumer_crash_resume_equals_dict_oracle(spark, tmp_pat
     objects, same durable state). Invariant: the final target equals a
     dict oracle applying every record in id order, with each replayed
     batch absorbed idempotently (no duplicates, no lost ops)."""
-    from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget
 
     wal, ckpt, tgt = str(tmp_path / "wal"), str(tmp_path / "ckpt"), str(tmp_path / "tgt")
 

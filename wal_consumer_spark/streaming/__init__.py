@@ -1,6 +1,5 @@
 from wal_consumer_spark.streaming.consumer import (  # noqa: F401
     BucketedParquetKeyValueTarget,
-    ParquetKeyValueTarget,
     WalStreamConsumer,
 )
 from wal_consumer_spark.streaming.metrics import (  # noqa: F401

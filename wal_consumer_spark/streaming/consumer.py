@@ -10,6 +10,8 @@ re-expressed on Structured Streaming. Semantic mapping (SURVEY.md §2.A):
                           per-key-reduced batch and applies it to the target
 - R6-R8 ADD/UPDATE/DELETE -> apply_cdc_batch merge semantics (left-anti
       join of the target slice on the batch's keys, plus its upserts)
+      against BucketedParquetKeyValueTarget, the one keyed target: it
+      rewrites only the buckets the batch touches and commits a manifest
 - R9  retry forever on IO failure (WalConsumer.java:259-269) -> retry loop
       inside foreachBatch with `sleep_on_io_failure` between attempts; an
       AnalysisException (a schema or plan bug) fails the batch at once
@@ -32,8 +34,7 @@ re-expressed on Structured Streaming. Semantic mapping (SURVEY.md §2.A):
 
 Ordering (SURVEY.md §4.3): per-`entity_id` order is guaranteed — each batch
 reduces to the last op per key by `id`, and files are consumed oldest-first
-so later batches only carry larger ids. `strict_global_order=True` degrades
-to a single partition for full-fidelity sequential apply.
+so later batches only carry larger ids.
 
 Spark actions per micro-batch: one aggregate over the reduced batch (record
 count, max `id`, touched buckets), the R10 count, and the target write
@@ -78,52 +79,16 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-class ParquetKeyValueTarget:
-    """Test/reference sink: a keyed state table persisted as parquet,
-    rewritten whole on every write — O(|state|) per micro-batch, fine for
-    small keyed state. For state that dwarfs a batch, use
-    BucketedParquetKeyValueTarget below (rewrites touched buckets only).
-
-    Production deployments swap either for a transactional MERGE sink
-    (Delta/Iceberg `MERGE INTO`) — same apply_cdc_batch semantics, but the
-    swap-commit becomes the table format's atomic commit."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self._version = 0
-
-    def read(self) -> DataFrame:
-        try:
-            return self.spark.read.schema(TARGET_SCHEMA).parquet(f"{self.path}/v{self._version}")
-        except Exception:
-            return self.spark.createDataFrame([], TARGET_SCHEMA)
-
-    def bucket_expr(self) -> Column:
-        """The whole state is one bucket."""
-        return F.lit(0)
-
-    def read_for(self, batch: DataFrame, touched: list[int] | None = None) -> DataFrame:
-        """State slice that could contain the batch's keys (whole state
-        here; bucket-pruned in BucketedParquetKeyValueTarget)."""
-        return self.read()
-
-    def write_for(
-        self, new_state: DataFrame, batch: DataFrame, touched: list[int] | None = None
-    ) -> None:
-        self.write(new_state)
-
-    def write(self, df: DataFrame) -> None:
-        self._version += 1
-        df.write.mode("overwrite").parquet(f"{self.path}/v{self._version}")
-
-
 class BucketedParquetKeyValueTarget:
     """Incremental keyed sink: state is hash-bucketed by entity_id, and a
     micro-batch reads and rewrites ONLY the buckets its keys fall in —
     O(|touched buckets|) per trigger instead of O(|state|), the difference
     between a viable and a hopeless streaming path once target state
     reaches TB scale (VERDICT.md r1, "What's wrong" #4).
+
+    Production deployments swap it for a transactional MERGE sink
+    (Delta/Iceberg `MERGE INTO`) — same apply_cdc_batch semantics, but the
+    manifest swap becomes the table format's atomic commit.
 
     Commit protocol on plain parquet (no table format available):
 
@@ -313,13 +278,12 @@ class WalStreamConsumer:
         spark: SparkSession,
         wal_dir: str,
         checkpoint_dir: str,
-        target: ParquetKeyValueTarget | BucketedParquetKeyValueTarget,
+        target: BucketedParquetKeyValueTarget,
         callback: Callable[[DataFrame], bool] | None = None,
         trigger_interval: str = "1 second",
         sleep_on_io_failure: float = 1.0,
         max_sync_retries: int | None = None,
         metric_prefix: str = "wal",
-        strict_global_order: bool = False,
         max_files_per_trigger: int | None = None,
     ):
         self.spark = spark
@@ -331,7 +295,6 @@ class WalStreamConsumer:
         self.sleep_on_io_failure = sleep_on_io_failure
         self.max_sync_retries = max_sync_retries
         self.metrics = ConsumerMetrics(prefix=metric_prefix)
-        self.strict_global_order = strict_global_order
         self.max_files_per_trigger = max_files_per_trigger
         self._listener: WalQueryListener | None = None
         self.query = None
@@ -342,8 +305,6 @@ class WalStreamConsumer:
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
-        if self.strict_global_order:
-            batch_df = batch_df.repartition(1).sortWithinPartitions("id")
         reduced = last_op_per_key(batch_df)
         # the batch's one stats action; the last-op reduction keeps each
         # key's max id, so max(id) equals the raw batch's
@@ -356,7 +317,7 @@ class WalStreamConsumer:
         self.metrics.set_state(WalState.NOT_EMPTY)
         touched = sorted(touched)
 
-        # bucketed targets read only the state slice the batch can touch
+        # read only the state slice the batch can touch
         current = self.target.read_for(reduced, touched)
         upserts = reduced.filter(F.col("operation") != Operation.DELETE)
         new_state = current.join(
@@ -483,7 +444,7 @@ class WalStreamConsumer:
         # same guarantee, immediate error. Cross-process exclusion comes from
         # the checkpoint's commit-log semantics on HDFS-compatible storage.
         active_ckpts = {
-            getattr(c, "_wcs_checkpoint", None)
+            c.checkpoint_dir
             for c in _ACTIVE_CONSUMERS
             if c.query is not None and c.query.isActive
         }
@@ -494,7 +455,6 @@ class WalStreamConsumer:
                 "(single-consumer lock semantics)"
             )
         self._acquire_lock()
-        self._wcs_checkpoint = self.checkpoint_dir
         _ACTIVE_CONSUMERS.add(self)
 
         self._listener = WalQueryListener(self.metrics)

@@ -84,9 +84,8 @@ class IncrementalRollup:
 
 
 class ParquetRollupTarget:
-    """Versioned parquet persistence for the rollup state (same swap-commit
-    discipline as consumer.ParquetKeyValueTarget; production = Delta/Iceberg
-    MERGE with the table format's atomic commit).
+    """Versioned parquet persistence for the rollup state (production =
+    Delta/Iceberg MERGE with the table format's atomic commit).
 
     Each version directory encodes the streaming batch id that produced it
     (``v<version>_b<batch_id>``), and the latest version is discovered from

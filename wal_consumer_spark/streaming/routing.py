@@ -14,39 +14,49 @@ target's apply identical to the single-type path (operators/cdc.py).
 The per-type loop is driver-side but bounded by the number of entity
 *classes* (a handful), never by data volume; each iteration is a fully
 distributed filter+merge.
+
+Each type's state is a BucketedParquetKeyValueTarget under
+`base_path/<entity_type>`: manifest-committed on disk, so it is safe across
+restarts — a router built by a restarted process sees every type and merges
+into the committed state.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wal_consumer_spark.operators.cdc import apply_cdc_batch
-from wal_consumer_spark.streaming.consumer import ParquetKeyValueTarget
+from wal_consumer_spark.streaming.consumer import BucketedParquetKeyValueTarget
 
 
 class TypeRoutedTarget:
-    """Fan-out sink: one keyed target table per entity_type."""
+    """Fan-out sink: one manifest-committed bucketed target per entity_type.
+    The router keeps no per-type state of its own — the on-disk manifests
+    are the state — so it is safe across restarts: a fresh router on the
+    same base path lists every committed type and merges into it."""
 
     def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
         self.base_path = base_path
-        self._targets: dict[str, ParquetKeyValueTarget] = {}
 
-    def target_for(self, entity_type: str) -> ParquetKeyValueTarget:
-        if entity_type not in self._targets:
-            self._targets[entity_type] = ParquetKeyValueTarget(
-                self.spark, f"{self.base_path}/{entity_type}"
-            )
-        return self._targets[entity_type]
+    def target_for(self, entity_type: str) -> BucketedParquetKeyValueTarget:
+        return BucketedParquetKeyValueTarget(self.spark, f"{self.base_path}/{entity_type}")
 
     def types(self) -> list[str]:
-        return sorted(self._targets)
+        """The entity types with committed state: type dirs holding a manifest."""
+        try:
+            names = os.listdir(self.base_path)
+        except FileNotFoundError:
+            return []
+        return sorted(n for n in names if os.path.isfile(self.target_for(n)._manifest_path()))
 
     def apply_batch(self, wal_batch: DataFrame) -> None:
         """Apply one WAL micro-batch, routed by entity_type. Each type's
         sub-batch goes through the standard last-op-per-key merge against
-        that type's target.
+        the buckets it touches in that type's target.
 
         One distributed pass: the batch is staged ONCE, partitioned by
         entity_type, and the partition directory names ARE the distinct
@@ -82,4 +92,5 @@ class TypeRoutedTarget:
                 # numeric-looking type name must stay a string
                 .withColumn("entity_type", F.col("entity_type").cast("string"))
             )
-            tgt.write(apply_cdc_batch(tgt.read(), sub))
+            touched = tgt.touched_buckets(sub)
+            tgt.write_for(apply_cdc_batch(tgt.read_for(sub, touched), sub), sub, touched)
