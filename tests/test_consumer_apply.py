@@ -2,9 +2,10 @@
 consumer applies ~640-record WAL files (ADD / UPDATE / DELETE / re-ADD)
 one per micro-batch to a 5k-row, 64-bucket target, and the test checks the
 state against a dict oracle, pins the Spark jobs and tasks each micro-batch
-costs, checks the target lands one file per touched bucket per version, and
-checks replay, callback, retry and warning behaviour, type routing across
-restarts and single-consumer exclusion."""
+costs, pins the target's flat, bucket-sorted version layout, and checks
+replay, callback, retry and warning behaviour, superseded rows, corrupt
+manifests, the backlog gauge, type routing across restarts and
+single-consumer exclusion."""
 
 from __future__ import annotations
 
@@ -15,12 +16,15 @@ import re
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from wal_consumer_spark.streaming import (
     BucketedParquetKeyValueTarget,
     WalStreamConsumer,
 )
+from wal_consumer_spark.streaming.consumer import TARGET_SCHEMA
 from wal_consumer_spark.streaming.routing import TypeRoutedTarget
 
 N_BUCKETS = 64
@@ -31,13 +35,17 @@ WAL_COLUMNS = ["id", "entity_id", "operation", "entity_bytes", "entity_type"]
 WAL_SCHEMA = "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, entity_type STRING"
 
 #: Spark jobs one micro-batch of this scenario runs (AQE submits each
-#: shuffle stage as its own job): the stats aggregate (3), Spark's parallel
-#: listing of the 64 bucket paths (1), the R10 count (4) and the write (5).
-JOBS_PER_BATCH = 13
-#: the tasks those jobs run under local[8] are 115 a batch, 64 of them the
-#: listing; caching the reduced batch pins every later job at
-#: spark.sql.shuffle.partitions tasks and roughly quadruples this
-MAX_TASKS_PER_BATCH = 120
+#: shuffle stage as its own job): the stats aggregate (3), the R10 count (4)
+#: and the write (5). The target slice spans a few flat version dirs, below
+#: the 32 paths that start Spark's parallel listing job.
+JOBS_PER_BATCH = 12
+#: the tasks those jobs run under local[8] are 23 a batch; caching the
+#: reduced batch pins every later job at spark.sql.shuffle.partitions tasks
+#: and multiplies this
+MAX_TASKS_PER_BATCH = 30
+#: parquet files in one version dir of this scenario (1 measured): the
+#: rebalanced write coalesces the whole slice into one output partition
+MAX_FILES_PER_VERSION = 2
 
 
 def _wal_files(rng: random.Random, keys: list[int]) -> list[list[tuple]]:
@@ -170,19 +178,27 @@ def test_jobs_and_tasks_per_batch_are_pinned(spark, applied):
     assert tasks <= MAX_TASKS_PER_BATCH * N_FILES, tasks
 
 
-def test_one_file_per_touched_bucket_per_version(spark, applied):
+def test_versions_are_flat_and_sorted_on_the_bucket(spark, applied):
+    """Each version is one flat dir of a few files; every row carries its
+    own bucket, and each file is sorted on it."""
     target, root = applied["target"], applied["root"]
     # v1 is the seeding write; the consumer's batches wrote v2..v5
     for i in range(1 + N_FILES):
         vdir = f"{root}/target/v{i + 1}"
-        buckets = [b for b in os.listdir(vdir) if b.startswith("__bucket=")]
-        for b in buckets:
-            data = [n for n in os.listdir(f"{vdir}/{b}") if n.endswith(".parquet")]
-            assert len(data) == 1, (vdir, b, data)
+        assert not [n for n in os.listdir(vdir) if n.startswith("__bucket=")], vdir
+        data = sorted(n for n in os.listdir(vdir) if n.endswith(".parquet"))
+        assert 1 <= len(data) <= MAX_FILES_PER_VERSION, (vdir, data)
+        for name in data:
+            buckets = pq.read_table(f"{vdir}/{name}", columns=["__bucket"])["__bucket"]
+            assert buckets.to_pylist() == sorted(buckets.to_pylist()), (vdir, name)
+        rows = spark.read.parquet(vdir)
+        assert rows.filter(F.col("__bucket") != target.bucket_expr()).count() == 0
+        assert rows.filter(F.col("__version") != i + 1).count() == 0
         if i:
             wal = spark.read.parquet(f"{root}/wal/part-{i - 1:04d}.parquet")
-            assert len(buckets) == len(target.touched_buckets(wal))
-    assert len(buckets) == N_BUCKETS  # 640 records touch every bucket
+            written = {r[0] for r in rows.select("__bucket").distinct().collect()}
+            assert written == set(target.touched_buckets(wal))
+    assert len(written) == N_BUCKETS  # 640 records touch every bucket
 
 
 def test_metrics_report_the_last_batch(applied):
@@ -190,6 +206,9 @@ def test_metrics_report_the_last_batch(applied):
     assert d["wal_last_batch_records"] == len({r[1] for r in applied["files"][-1]})
     assert d["wal_last_batch_touched_buckets"] == N_BUCKETS
     assert d["wal_last_batch_apply_seconds"] > 0
+    phases = [d[f"wal_last_batch_{p}_seconds"] for p in ("stats", "r10", "write")]
+    assert all(t >= 0 for t in phases), phases
+    assert sum(phases) <= d["wal_last_batch_apply_seconds"]
 
 
 def test_replay_with_fresh_checkpoint_counts_already_done(spark, applied):
@@ -320,3 +339,77 @@ def test_second_consumer_on_an_active_checkpoint_fails_fast(spark, tmp_path):
     finally:
         first.close()
         second.close()
+
+
+def test_superseded_rows_do_not_come_back(spark, tmp_path):
+    """Bucket b moves to v3 while v2 still holds b's old rows next to the
+    live rows of bucket c: read() and read_for over b and c return only
+    each bucket's committed version, against a dict oracle."""
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=8)
+    keys = spark.range(1, 41).withColumnRenamed("id", "entity_id")
+    by_bucket: dict[int, list[int]] = {}
+    for k, bucket in keys.select("entity_id", target.bucket_expr()).collect():
+        by_bucket.setdefault(bucket, []).append(k)
+    b, c = sorted(by_bucket)[:2]
+    kb1, kb2, kb3 = by_bucket[b][:3]
+    kc1, kc2 = by_bucket[c][:2]
+    oracle = {k: f"seed:{k}".encode() for k in (kb1, kb2, kc1, kc2)}
+    target.write(spark.createDataFrame([(k, p, "T") for k, p in oracle.items()], TARGET_SCHEMA))
+    consumer = WalStreamConsumer(
+        spark, str(tmp_path / "wal"), str(tmp_path / "ckpt"), target
+    )
+    batches = [
+        [(1, kb1, "UPDATE", b"b1-v2"), (2, kc1, "UPDATE", b"c1-v2")],
+        [(3, kb1, "DELETE", None), (4, kb3, "ADD", b"b3-v3"), (5, kb2, "UPDATE", b"b2-v3")],
+    ]
+    for i, records in enumerate(batches):
+        consumer._apply_batch(_batch(spark, records), i)
+        _apply(oracle, records)
+    manifest = target._manifest()
+    assert (manifest[str(b)], manifest[str(c)]) == (3, 2)
+    v2 = spark.read.parquet(f"{target.path}/v2")
+    assert v2.filter(F.col("__bucket") == b).count() == 2  # kb1, kb2 as of v2
+
+    def rows(df):
+        return sorted((r.entity_id, bytes(r.entity_bytes)) for r in df.collect())
+
+    assert rows(target.read()) == sorted(oracle.items())
+    slice_ = target.read_for(_batch(spark, [(6, kb2, "UPDATE", b"x"), (7, kc2, "UPDATE", b"y")]))
+    assert rows(slice_) == sorted(oracle.items())  # every key lives in b or c
+
+
+def test_read_for_pushes_the_bucket_filter_to_parquet(applied):
+    """The requested buckets reach the parquet scan as a pushed-down IN,
+    so row-group statistics on the sorted __bucket can skip the rest."""
+    plan = applied["target"].read_for(None, [0, 1])._jdf.queryExecution().executedPlan().toString()
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters:" in ln]
+    assert pushed and all("In(__bucket, [0,1])" in ln for ln in pushed), plan
+
+
+@pytest.mark.parametrize("garbage", ["{not json", "[1, 2]", '{"0": "v1"}', '{"0": null}'])
+def test_corrupt_manifest_fails_loudly(spark, tmp_path, garbage):
+    """An unreadable manifest raises and names its path; it never reads
+    as an empty target whose next commit drops the untouched buckets."""
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=N_BUCKETS)
+    os.makedirs(target.path)
+    with open(target._manifest_path(), "w", encoding="utf-8") as f:
+        f.write(garbage)
+    batch = _batch(spark, [(1, 1, "ADD", b"a")])
+    new_state = batch.select("entity_id", "entity_bytes", "entity_type")
+    with pytest.raises(ValueError, match=re.escape(target._manifest_path())):
+        target.read()
+    with pytest.raises(ValueError, match=re.escape(target._manifest_path())):
+        target.write_for(new_state, batch, [0])
+    with open(target._manifest_path(), encoding="utf-8") as f:
+        assert f.read() == garbage
+
+
+def test_backlog_is_zero_only_while_the_wal_dir_is_missing(spark, tmp_path):
+    wal = tmp_path / "wal"
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"))
+    consumer = WalStreamConsumer(spark, str(wal), str(tmp_path / "ckpt"), target)
+    assert consumer.backlog() == 0
+    wal.mkdir()
+    (wal / "part-0000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        consumer.backlog(max_age=0)

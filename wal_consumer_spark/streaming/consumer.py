@@ -37,13 +37,14 @@ reduces to the last op per key by `id`, and files are consumed oldest-first
 so later batches only carry larger ids.
 
 Spark actions per micro-batch: one aggregate over the reduced batch (record
-count, max `id`, touched buckets), the R10 count, and the target write
-(plus Spark's parallel file listing when the target slice spans more than
-`spark.sql.sources.parallelPartitionDiscovery.threshold` bucket paths). The
-reduced batch is not cached: a cached plan keeps its
-`spark.sql.shuffle.partitions` output partitioning, which AQE cannot
-coalesce, so every later job would run that many tasks; recomputing the
-reduce from the batch's few WAL files costs less.
+count, max `id`, touched buckets), the R10 count, and the target write.
+The target slice is one scan over the flat version dirs its buckets point
+to, so Spark's parallel file listing job appears only once those dirs
+number more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+(32) distinct live versions. The reduced batch is not cached: a cached
+plan keeps its `spark.sql.shuffle.partitions` output partitioning, which
+AQE cannot coalesce, so every later job would run that many tasks;
+recomputing the reduce from the batch's few WAL files costs less.
 """
 
 from __future__ import annotations
@@ -62,6 +63,8 @@ from wal_consumer_spark.sources.wal_source import read_wal_stream
 from wal_consumer_spark.streaming.metrics import ConsumerMetrics, WalQueryListener, WalState
 
 TARGET_SCHEMA = "entity_id LONG, entity_bytes BINARY, entity_type STRING"
+#: a target version's files: the target columns plus the row's bucket and version
+STORED_SCHEMA = f"{TARGET_SCHEMA}, __bucket INT, __version INT"
 
 #: consumers with a live query, for fail-fast checkpoint exclusivity (R2-R4)
 _ACTIVE_CONSUMERS: set["WalStreamConsumer"] = set()
@@ -92,11 +95,13 @@ class BucketedParquetKeyValueTarget:
 
     Commit protocol on plain parquet (no table format available):
 
-    - each write lands every touched bucket under a fresh version dir
-      ``v<n>/__bucket=<b>/``, never mutating prior versions; the write is
-      rebalanced on the bucket, so a version holds one file per touched
-      bucket (AQE splits a bucket only past its advisory partition size)
-      and a full read opens one file per bucket;
+    - each write lands every touched bucket in a fresh, flat version dir
+      ``v<n>/``, never mutating prior versions. Rows carry two stored
+      columns besides the target's: ``__bucket`` (the row's bucket) and
+      ``__version`` (n). The write is rebalanced on ``__bucket`` and sorted
+      on it within each file, so a version holds a few size-bounded files
+      (one writer per output partition, not one per bucket) and each file
+      holds whole buckets with tight row-group min/max on ``__bucket``;
     - a manifest (bucket -> version) is swapped in atomically LAST
       (os.replace), so a crash mid-write leaves the previous manifest — and
       thus the previous consistent state — intact, mirroring the atomic
@@ -105,9 +110,14 @@ class BucketedParquetKeyValueTarget:
       same output, so the at-least-once foreachBatch contract stays
       idempotent (R10/R11).
 
-    Reads reconstruct state as a union of per-bucket version dirs; reading
-    for a batch prunes to the batch's buckets. Old version dirs accumulate
-    and can be garbage-collected once no manifest references them (the
+    A read is one scan over the distinct version dirs its buckets point to,
+    filtered on ``__bucket IN (buckets)`` and ``manifest[__bucket] ==
+    __version``. The second conjunct drops the rows of a bucket that a later
+    version superseded but an older dir, still live for other buckets,
+    holds. The first is pushed down to parquet, so the rows a read decodes
+    are bounded by row-group and page pruning on the sorted ``__bucket``,
+    not by the size of the dirs it opens. Old version dirs accumulate and
+    can be garbage-collected once no manifest references them (the
     compaction sweep a production job runs out-of-band)."""
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
@@ -121,13 +131,21 @@ class BucketedParquetKeyValueTarget:
         return f"{self.path}/_MANIFEST.json"
 
     def _manifest(self) -> dict[str, int]:
+        """The committed bucket -> version map; empty only when no manifest
+        was ever committed. An unreadable manifest raises: read as empty,
+        the next commit would drop every bucket the batch did not touch."""
         import json
 
+        path = self._manifest_path()
         try:
-            with open(self._manifest_path(), encoding="utf-8") as f:
-                return {k: int(v) for k, v in json.load(f).items()}
-        except (FileNotFoundError, ValueError):
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+        except FileNotFoundError:
             return {}
+        try:
+            return {k: int(v) for k, v in json.loads(text).items()}
+        except (ValueError, TypeError, AttributeError) as e:
+            raise ValueError(f"unreadable target manifest {path}: {e}") from e
 
     def _commit_manifest(self, manifest: dict[str, int]) -> None:
         import json
@@ -148,19 +166,18 @@ class BucketedParquetKeyValueTarget:
         return df.withColumn("__bucket", self.bucket_expr())
 
     def _read_buckets(self, manifest: dict[str, int], buckets: list[int]) -> DataFrame:
-        import os
-
-        # a bucket whose last write emptied it has a manifest entry but no
-        # partition dir (partitionBy writes no dir for zero rows) — skip it.
-        paths = [
-            p
-            for b in buckets
-            if str(b) in manifest
-            if os.path.isdir(p := f"{self.path}/v{manifest[str(b)]}/__bucket={b}")
-        ]
-        if not paths:
+        live = {b: manifest[str(b)] for b in buckets if str(b) in manifest}
+        if not live:
             return self.spark.createDataFrame([], TARGET_SCHEMA)
-        return self.spark.read.schema(TARGET_SCHEMA).parquet(*paths)
+        version_of = F.create_map(*[F.lit(x) for kv in live.items() for x in kv])
+        paths = [f"{self.path}/v{v}" for v in sorted(set(live.values()))]
+        return (
+            self.spark.read.schema(STORED_SCHEMA)
+            .parquet(*paths)
+            .filter(F.col("__bucket").isin(list(live)))
+            .filter(version_of[F.col("__bucket")] == F.col("__version"))
+            .select(*TARGET_COLS)
+        )
 
     # -- target API --------------------------------------------------------
 
@@ -170,7 +187,9 @@ class BucketedParquetKeyValueTarget:
 
     def read_for(self, batch: DataFrame, touched: list[int] | None = None) -> DataFrame:
         """Only the buckets the batch's keys hash into: the collect is
-        bounded by n_buckets, and every other bucket is never opened. Pass
+        bounded by n_buckets, the scan covers only the version dirs those
+        buckets point to, and the pushed-down bucket filter skips the other
+        buckets' row groups. Pass
         `touched` (from touched_buckets) to reuse an already-computed bucket
         list — the consumer computes it once per micro-batch for both the
         read and the write."""
@@ -200,30 +219,29 @@ class BucketedParquetKeyValueTarget:
         manifest = self._manifest()
         if touched is None:
             touched = self.touched_buckets(batch)
-        version, _ = self._write_version(new_state, manifest)
+        version = self._write_version(new_state, manifest)
         for b in touched:
             manifest[str(b)] = version
         self._commit_manifest(manifest)
 
-    def _write_version(
-        self, df: DataFrame, manifest: dict[str, int]
-    ) -> tuple[int, str]:
+    def _write_version(self, df: DataFrame, manifest: dict[str, int]) -> int:
         """The single write protocol for both the incremental and the
-        compaction path: land `df` bucketed under the next version dir.
-        Overwrite, not append: the dir is invisible until the caller's
-        manifest commit, and a foreachBatch REPLAY of a crash that landed
-        files but never committed recomputes the same version number —
-        append would double every row of the first attempt."""
+        compaction path: land `df`, tagged with each row's bucket and the
+        version, in the next flat version dir. Overwrite, not append: the
+        dir is invisible until the caller's manifest commit, and a
+        foreachBatch REPLAY of a crash that landed files but never committed
+        recomputes the same version number — append would double every row
+        of the first attempt."""
         version = max(manifest.values(), default=0) + 1
-        vdir = f"{self.path}/v{version}"
         (
             self._bucket(df)
+            .withColumn("__version", F.lit(version))
             .hint("rebalance", "__bucket")
-            .write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(vdir)
+            .sortWithinPartitions("__bucket")
+            .write.mode("overwrite")
+            .parquet(f"{self.path}/v{version}")
         )
-        return version, vdir
+        return version
 
     def gc(self) -> list[str]:
         """Remove version dirs no committed manifest entry references (the
@@ -255,19 +273,12 @@ class BucketedParquetKeyValueTarget:
         return removed
 
     def write(self, df: DataFrame) -> None:
-        """Whole-state write (compaction / bootstrap): the committed
-        manifest is REPLACED, so buckets absent from `df` (e.g. fully
-        deleted keys) stop referencing stale versions instead of
-        resurrecting on the next read."""
-        import os
-
-        version, vdir = self._write_version(df, self._manifest())
-        written = [
-            int(nm.split("=", 1)[1])
-            for nm in os.listdir(vdir)
-            if nm.startswith("__bucket=")
-        ]
-        self._commit_manifest({str(b): version for b in written})
+        """Whole-state write (compaction / bootstrap): every bucket is
+        committed to the new version, so buckets absent from `df` (e.g.
+        fully deleted keys) read as empty instead of resurrecting an older
+        version's rows."""
+        version = self._write_version(df, self._manifest())
+        self._commit_manifest({str(b): version for b in range(self.n_buckets)})
 
 
 class WalStreamConsumer:
@@ -311,6 +322,7 @@ class WalStreamConsumer:
         n_batch, max_id, touched = reduced.agg(
             F.count(F.lit(1)), F.max("id"), F.collect_set(self.target.bucket_expr())
         ).first()
+        stats_s = time.monotonic() - t0
         if n_batch == 0:
             self.metrics.set_state(WalState.EMPTY)
             return
@@ -326,6 +338,7 @@ class WalStreamConsumer:
 
         already = None
         attempt = 0
+        r10_s = write_s = 0.0
         while True:  # R9: retry IO failures forever (bounded only if configured)
             try:
                 if self.callback is not None and not self.callback(reduced):
@@ -336,6 +349,7 @@ class WalStreamConsumer:
                 if already is None:
                     # R10: upserts whose payload is already in the target
                     # were applied before a replay
+                    t = time.monotonic()
                     already = (
                         upserts.join(
                             current.select(
@@ -346,7 +360,10 @@ class WalStreamConsumer:
                         .filter(F.col("entity_bytes") == F.col("__tgt_bytes"))
                         .count()
                     )
+                    r10_s = time.monotonic() - t
+                t = time.monotonic()
                 self.target.write_for(new_state, reduced, touched)
+                write_s = time.monotonic() - t
                 break
             except InterruptedError:
                 raise
@@ -366,6 +383,9 @@ class WalStreamConsumer:
         m.num_synchronized += n_batch - already
         self._record_applied(max_id)
         m.last_batch_records, m.last_batch_touched_buckets = n_batch, len(touched)
+        m.last_batch_stats_seconds = stats_s
+        m.last_batch_r10_seconds = r10_s
+        m.last_batch_write_seconds = write_s
         m.last_batch_apply_seconds = time.monotonic() - t0
 
     def _applied_id_path(self) -> str:
@@ -420,13 +440,16 @@ class WalStreamConsumer:
         self._load_applied_id()  # restart: recover the persisted mark
         from wal_consumer_spark.sources.wal_source import read_wal_batch
 
-        df = read_wal_batch(self.spark, self.wal_dir)
-        if self._last_applied_id is not None:
-            df = df.filter(F.col("id") > self._last_applied_id)
         try:
-            n = df.count()
-        except Exception:
+            df = read_wal_batch(self.spark, self.wal_dir)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             n = 0  # WAL dir not created yet == nothing to consume
+        else:
+            if self._last_applied_id is not None:
+                df = df.filter(F.col("id") > self._last_applied_id)
+            n = df.count()
         self._backlog_cache = (n, now)
         self.metrics.backlog = n
         return n

@@ -34,10 +34,14 @@ class ConsumerMetrics:
     num_io_failures: int = 0
     backlog: int = 0
     #: the last applied micro-batch: reduced records, touched buckets and
-    #: apply wall time, from the consumer's per-batch aggregate
+    #: apply wall time, from the consumer's per-batch aggregate, and the
+    #: wall time of its stats aggregate, R10 count and target write
     last_batch_records: int = 0
     last_batch_touched_buckets: int = 0
     last_batch_apply_seconds: float = 0.0
+    last_batch_stats_seconds: float = 0.0
+    last_batch_r10_seconds: float = 0.0
+    last_batch_write_seconds: float = 0.0
     _not_empty_since: float | None = field(default=None, repr=False)
     _not_empty_accum: float = field(default=0.0, repr=False)
 
@@ -70,6 +74,9 @@ class ConsumerMetrics:
             f"{p}_last_batch_records": self.last_batch_records,
             f"{p}_last_batch_touched_buckets": self.last_batch_touched_buckets,
             f"{p}_last_batch_apply_seconds": self.last_batch_apply_seconds,
+            f"{p}_last_batch_stats_seconds": self.last_batch_stats_seconds,
+            f"{p}_last_batch_r10_seconds": self.last_batch_r10_seconds,
+            f"{p}_last_batch_write_seconds": self.last_batch_write_seconds,
         }
 
 
