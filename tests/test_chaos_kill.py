@@ -6,10 +6,12 @@ a dead JVM, not a Python-level unwind).
 
 Harness: a child process (own Python + own Spark JVM, launched in its own
 process group) applies CDC batches to a shared on-disk
-BucketedParquetKeyValueTarget, journaling "start i" / "committed i" lines
+BucketedParquetKeyValueTarget through the consumer's own
+WalStreamConsumer._apply_batch, journaling "start i" / "committed i" lines
 (fsync'd) around each apply. The parent SIGKILLs the ENTIRE process group
 at a random point after observing a fresh "start" line — landing the kill
-anywhere in read_for/apply/parquet-write/manifest-replace — then verifies,
+anywhere in the stats aggregate, read_for, the window-merge write, the
+manifest replace or the gc() sweep — then verifies,
 with its own session, the recovery invariants:
 
 - the manifest always parses (os.replace can never leave a torn file);
@@ -64,11 +66,11 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-from wal_consumer_spark.operators.cdc import apply_cdc_batch
-from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget
+from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget, WalStreamConsumer
 
 records = json.load(open(records_path))
 target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
+consumer = WalStreamConsumer(spark, tgt + "_wal", tgt + "_ckpt", target)
 log = open(log_path, "a")
 
 def journal(line):
@@ -91,10 +93,7 @@ for i in range(start_batch, n_batches):
         "entity_bytes BINARY, entity_type STRING",
     )
     journal("start " + str(i))
-    touched = target.touched_buckets(batch)
-    state = target.read_for(batch, touched)
-    new_state = apply_cdc_batch(state, batch)
-    target.write_for(new_state, batch, touched)
+    consumer._apply_batch(batch, i)
     journal("committed " + str(i))
 
 spark.stop()

@@ -3,15 +3,18 @@ consumer applies ~640-record WAL files (ADD / UPDATE / DELETE / re-ADD)
 one per micro-batch to a 5k-row, 64-bucket target, and the test checks the
 state against a dict oracle, pins the Spark jobs and tasks each micro-batch
 costs, pins the target's flat, bucket-sorted version layout, and checks
-replay, callback, retry and warning behaviour, superseded rows, corrupt
-manifests, the backlog gauge, type routing across restarts and
-single-consumer exclusion."""
+replay, callback, retry and warning behaviour, the window merge on a
+hand-built batch, counts taken once across a failed write, trigger
+durations, dead-version collection, superseded rows, corrupt manifests,
+the backlog gauge, type routing across restarts and single-consumer
+exclusion."""
 
 from __future__ import annotations
 
 import os
 import random
 import re
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -35,14 +38,15 @@ WAL_COLUMNS = ["id", "entity_id", "operation", "entity_bytes", "entity_type"]
 WAL_SCHEMA = "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, entity_type STRING"
 
 #: Spark jobs one micro-batch of this scenario runs (AQE submits each
-#: shuffle stage as its own job): the stats aggregate (3), the R10 count (4)
-#: and the write (5). The target slice spans a few flat version dirs, below
-#: the 32 paths that start Spark's parallel listing job.
-JOBS_PER_BATCH = 12
-#: the tasks those jobs run under local[8] are 23 a batch; caching the
-#: reduced batch pins every later job at spark.sql.shuffle.partitions tasks
-#: and multiplies this
-MAX_TASKS_PER_BATCH = 30
+#: shuffle stage as its own job): the stats aggregate (2) and the write (3:
+#: the merge window's shuffle, the rebalance on the bucket, the write).
+#: The target slice spans a few flat version dirs, below the 32 paths that
+#: start Spark's parallel listing job.
+JOBS_PER_BATCH = 5
+#: the tasks those jobs run under local[8] are 12 a batch; caching a
+#: shuffled frame pins every later job at spark.sql.shuffle.partitions
+#: tasks and multiplies this
+MAX_TASKS_PER_BATCH = 16
 #: parquet files in one version dir of this scenario (1 measured): the
 #: rebalanced write coalesces the whole slice into one output partition
 MAX_FILES_PER_VERSION = 2
@@ -180,24 +184,23 @@ def test_jobs_and_tasks_per_batch_are_pinned(spark, applied):
 
 def test_versions_are_flat_and_sorted_on_the_bucket(spark, applied):
     """Each version is one flat dir of a few files; every row carries its
-    own bucket, and each file is sorted on it."""
+    own bucket, and each file is sorted on it. Every batch touched every
+    bucket, so gc() left only the last batch's version."""
     target, root = applied["target"], applied["root"]
-    # v1 is the seeding write; the consumer's batches wrote v2..v5
-    for i in range(1 + N_FILES):
-        vdir = f"{root}/target/v{i + 1}"
-        assert not [n for n in os.listdir(vdir) if n.startswith("__bucket=")], vdir
-        data = sorted(n for n in os.listdir(vdir) if n.endswith(".parquet"))
-        assert 1 <= len(data) <= MAX_FILES_PER_VERSION, (vdir, data)
-        for name in data:
-            buckets = pq.read_table(f"{vdir}/{name}", columns=["__bucket"])["__bucket"]
-            assert buckets.to_pylist() == sorted(buckets.to_pylist()), (vdir, name)
-        rows = spark.read.parquet(vdir)
-        assert rows.filter(F.col("__bucket") != target.bucket_expr()).count() == 0
-        assert rows.filter(F.col("__version") != i + 1).count() == 0
-        if i:
-            wal = spark.read.parquet(f"{root}/wal/part-{i - 1:04d}.parquet")
-            written = {r[0] for r in rows.select("__bucket").distinct().collect()}
-            assert written == set(target.touched_buckets(wal))
+    assert set(target._manifest().values()) == {1 + N_FILES}  # v1 seeded
+    vdir = f"{root}/target/v{1 + N_FILES}"
+    assert not [n for n in os.listdir(vdir) if n.startswith("__bucket=")], vdir
+    data = sorted(n for n in os.listdir(vdir) if n.endswith(".parquet"))
+    assert 1 <= len(data) <= MAX_FILES_PER_VERSION, (vdir, data)
+    for name in data:
+        buckets = pq.read_table(f"{vdir}/{name}", columns=["__bucket"])["__bucket"]
+        assert buckets.to_pylist() == sorted(buckets.to_pylist()), (vdir, name)
+    rows = spark.read.parquet(vdir)
+    assert rows.filter(F.col("__bucket") != target.bucket_expr()).count() == 0
+    assert rows.filter(F.col("__version") != 1 + N_FILES).count() == 0
+    wal = spark.read.parquet(f"{root}/wal/part-{N_FILES - 1:04d}.parquet")
+    written = {r[0] for r in rows.select("__bucket").distinct().collect()}
+    assert written == set(target.touched_buckets(wal))
     assert len(written) == N_BUCKETS  # 640 records touch every bucket
 
 
@@ -206,9 +209,29 @@ def test_metrics_report_the_last_batch(applied):
     assert d["wal_last_batch_records"] == len({r[1] for r in applied["files"][-1]})
     assert d["wal_last_batch_touched_buckets"] == N_BUCKETS
     assert d["wal_last_batch_apply_seconds"] > 0
-    phases = [d[f"wal_last_batch_{p}_seconds"] for p in ("stats", "r10", "write")]
-    assert all(t >= 0 for t in phases), phases
+    phases = [d[f"wal_last_batch_{p}_seconds"] for p in ("stats", "write")]
+    assert all(t > 0 for t in phases), phases
     assert sum(phases) <= d["wal_last_batch_apply_seconds"]
+    assert "wal_last_batch_r10_seconds" not in d
+
+
+def test_metrics_report_the_last_trigger_durations(applied):
+    """The listener keeps StreamingQueryProgress.durationMs; its events
+    arrive asynchronously, so poll for them."""
+    metrics = applied["consumer"].metrics
+    deadline = time.monotonic() + 30
+    while "addBatch" not in metrics.last_trigger_ms and time.monotonic() < deadline:
+        time.sleep(0.1)
+    d = metrics.as_dict()
+    assert 0 < d["wal_last_trigger_addBatch_ms"] <= d["wal_last_trigger_triggerExecution_ms"], d
+
+
+def test_dead_versions_are_collected(applied):
+    """The consumer runs gc() after each committed apply: the target dir
+    holds exactly the version dirs its manifest points to."""
+    target = applied["target"]
+    live = {f"v{v}" for v in target._manifest().values()}
+    assert {n for n in os.listdir(target.path) if n.startswith("v")} == live
 
 
 def test_replay_with_fresh_checkpoint_counts_already_done(spark, applied):
@@ -249,6 +272,83 @@ def test_callback_false_sees_wal_columns_only(spark, tmp_path):
     assert consumer.metrics.num_ignored_already_done == 2
     assert consumer.metrics.num_synchronized == 0
     assert _state(target) == {}
+
+
+def _seeded(spark, path, cls=BucketedParquetKeyValueTarget):
+    """A 4-bucket target holding keys 1..12 with payload `seed:<k>`, and
+    its dict."""
+    target = cls(spark, path, n_buckets=4)
+    state = {k: f"seed:{k}".encode() for k in range(1, 13)}
+    target.write(spark.createDataFrame([(k, p, "T") for k, p in state.items()], TARGET_SCHEMA))
+    return target, state
+
+
+#: one micro-batch, rows out of id order: key 100 ADD -> UPDATE -> DELETE,
+#: key 1 DELETE -> re-ADD, key 2 UPDATE to the payload it already holds
+#: (R10), key 3 UPDATE, key 200 DELETE of a key the target never held
+MERGE_BATCH = [
+    (7, 1, "ADD", b"again:1"),
+    (2, 100, "UPDATE", b"u:100"),
+    (5, 2, "UPDATE", b"seed:2"),
+    (1, 100, "ADD", b"a:100"),
+    (4, 1, "DELETE", None),
+    (3, 100, "DELETE", None),
+    (6, 200, "DELETE", None),
+    (8, 3, "UPDATE", b"u:3"),
+]
+
+
+def test_window_merge_matches_dict_oracle(spark, tmp_path):
+    """One batch through _apply_batch: the state, the batch's key count
+    and the R10 count equal a dict oracle's, and keys the batch does not
+    hold keep their rows in the buckets it rewrites."""
+    target, expected = _seeded(spark, str(tmp_path / "tgt"))
+    consumer = WalStreamConsumer(spark, str(tmp_path / "wal"), str(tmp_path / "ckpt"), target)
+    consumer._apply_batch(_batch(spark, MERGE_BATCH), 0)
+    already = _apply(expected, MERGE_BATCH)
+    assert already == 1  # key 2
+    assert _state(target) == expected
+    batch_keys = {r[1] for r in MERGE_BATCH}
+    m = consumer.metrics
+    assert (m.last_batch_records, m.num_ignored_already_done) == (len(batch_keys), already)
+    assert m.num_synchronized == len(batch_keys) - already
+    rewritten = {int(b) for b, v in target._manifest().items() if v == 2}
+    keys = spark.createDataFrame([(k,) for k in expected], "entity_id LONG")
+    untouched_in_rewritten = [
+        k for k, b in keys.select("entity_id", target.bucket_expr()).collect()
+        if b in rewritten and k not in batch_keys
+    ]
+    assert untouched_in_rewritten, rewritten
+
+
+def test_a_failed_write_is_counted_once(spark, tmp_path):
+    """The first write_for runs part of the plan, then raises OSError;
+    the retry's write commits. Counts come from the committed attempt
+    alone, so each attempt needs its own Observation."""
+
+    class FlakyTarget(BucketedParquetKeyValueTarget):
+        failures = 1
+
+        def write_for(self, new_state, batch, touched=None):
+            if self.failures:
+                self.failures -= 1
+                new_state.take(1)  # a write that dies after its first rows
+                raise OSError("sink unavailable")
+            super().write_for(new_state, batch, touched)
+
+    target, expected = _seeded(spark, str(tmp_path / "tgt"), FlakyTarget)
+    consumer = WalStreamConsumer(
+        spark, str(tmp_path / "wal"), str(tmp_path / "ckpt"), target,
+        sleep_on_io_failure=0.0, max_sync_retries=2,
+    )
+    consumer._apply_batch(_batch(spark, MERGE_BATCH), 0)
+    already = _apply(expected, MERGE_BATCH)
+    n_keys = len({r[1] for r in MERGE_BATCH})
+    m = consumer.metrics
+    assert m.num_io_failures == 1
+    assert (m.last_batch_records, m.num_ignored_already_done) == (n_keys, already)
+    assert m.num_synchronized == n_keys - already
+    assert _state(target) == expected
 
 
 def test_io_errors_retry_and_analysis_errors_fail_fast(spark, tmp_path):

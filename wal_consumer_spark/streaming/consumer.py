@@ -8,16 +8,19 @@ re-expressed on Structured Streaming. Semantic mapping (SURVEY.md §2.A):
                           claim maps to restart supervision)
 - R5  callback         -> foreachBatch(apply); the callback receives the
                           per-key-reduced batch and applies it to the target
-- R6-R8 ADD/UPDATE/DELETE -> apply_cdc_batch merge semantics (left-anti
-      join of the target slice on the batch's keys, plus its upserts)
-      against BucketedParquetKeyValueTarget, the one keyed target: it
-      rewrites only the buckets the batch touches and commits a manifest
+- R6-R8 ADD/UPDATE/DELETE -> apply_cdc_batch merge semantics as one window
+      per `entity_id` over the batch's records and the target slice: the
+      batch's last op by `id` wins over the target row, and a winning
+      DELETE drops the key. BucketedParquetKeyValueTarget, the one keyed
+      target, rewrites only the buckets the batch touches, commits a
+      manifest, and its dead versions are swept after each batch
 - R9  retry forever on IO failure (WalConsumer.java:259-269) -> retry loop
       inside foreachBatch with `sleep_on_io_failure` between attempts; an
       AnalysisException (a schema or plan bug) fails the batch at once
-- R10 idempotent-skip accounting (WalConsumer.java:271-278) -> a join of the
-      batch's upserts against the pre-apply target slice counts records
-      whose payload is already present
+- R10 idempotent-skip accounting (WalConsumer.java:271-278) -> the merge
+      window also carries each key's pre-apply target payload; an
+      Observation on the written plan counts the winning upserts whose
+      payload is already present, and the batch's keys
 - R11 exactly-once advance (WalHeadHandle.java:29-42) -> the batch commits
       to the checkpoint only after foreachBatch returns; a failure replays
       the whole batch (at-least-once, idempotent by R10); the target commits
@@ -36,15 +39,18 @@ Ordering (SURVEY.md §4.3): per-`entity_id` order is guaranteed — each batch
 reduces to the last op per key by `id`, and files are consumed oldest-first
 so later batches only carry larger ids.
 
-Spark actions per micro-batch: one aggregate over the reduced batch (record
-count, max `id`, touched buckets), the R10 count, and the target write.
-The target slice is one scan over the flat version dirs its buckets point
-to, so Spark's parallel file listing job appears only once those dirs
-number more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
-(32) distinct live versions. The reduced batch is not cached: a cached
-plan keeps its `spark.sql.shuffle.partitions` output partitioning, which
-AQE cannot coalesce, so every later job would run that many tasks;
-recomputing the reduce from the batch's few WAL files costs less.
+Spark actions per micro-batch: two. One aggregate over the raw batch (max
+`id`, touched buckets) and the target write, which reduces, merges and
+counts in the same plan; a user callback's reduced batch costs its own.
+A retried write takes a fresh Observation, because one serves a single
+action. The target slice is one scan over the flat version dirs its
+buckets point to, so Spark's parallel file listing job appears only once
+those dirs number more than
+`spark.sql.sources.parallelPartitionDiscovery.threshold` (32) distinct
+live versions. Nothing is cached: a cached plan keeps its
+`spark.sql.shuffle.partitions` output partitioning, which AQE cannot
+coalesce, so every later job would run that many tasks; the write
+re-scans the batch's few WAL files instead.
 """
 
 from __future__ import annotations
@@ -54,7 +60,7 @@ import warnings
 from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wal_consumer_spark.operators.cdc import TARGET_COLS, last_op_per_key
@@ -65,6 +71,9 @@ from wal_consumer_spark.streaming.metrics import ConsumerMetrics, WalQueryListen
 TARGET_SCHEMA = "entity_id LONG, entity_bytes BINARY, entity_type STRING"
 #: a target version's files: the target columns plus the row's bucket and version
 STORED_SCHEMA = f"{TARGET_SCHEMA}, __bucket INT, __version INT"
+
+#: row source tags of the merge window: a batch record outranks the target row
+_BATCH, _TARGET = 1, 0
 
 #: consumers with a live query, for fail-fast checkpoint exclusivity (R2-R4)
 _ACTIVE_CONSUMERS: set["WalStreamConsumer"] = set()
@@ -80,6 +89,27 @@ def _pid_alive(pid: int) -> bool:
     except PermissionError:
         return True
     return True
+
+
+def _window_merge(batch: DataFrame, current: DataFrame) -> DataFrame:
+    """R6-R8 as one window over the batch's records and the target slice:
+    per `entity_id`, the winning row is the batch's last op by `id`, or the
+    target row when the batch does not hold the key. `__src` tags each
+    row's source and `__old` carries the target row's payload (NULL when
+    the target lacks the key). The caller drops winning DELETEs."""
+    rows = batch.withColumn("__src", F.lit(_BATCH)).unionByName(
+        current.withColumn("__src", F.lit(_TARGET)), allowMissingColumns=True
+    )
+    w = Window.partitionBy("entity_id").orderBy(F.col("__src").desc(), F.col("id").desc())
+    old = F.max(F.when(F.col("__src") == _TARGET, F.col("entity_bytes")))
+    return (
+        rows.withColumn("__rn", F.row_number().over(w))
+        .withColumn(
+            "__old",
+            old.over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)),
+        )
+        .filter(F.col("__rn") == 1)
+    )
 
 
 class BucketedParquetKeyValueTarget:
@@ -116,9 +146,9 @@ class BucketedParquetKeyValueTarget:
     version superseded but an older dir, still live for other buckets,
     holds. The first is pushed down to parquet, so the rows a read decodes
     are bounded by row-group and page pruning on the sorted ``__bucket``,
-    not by the size of the dirs it opens. Old version dirs accumulate and
-    can be garbage-collected once no manifest references them (the
-    compaction sweep a production job runs out-of-band)."""
+    not by the size of the dirs it opens. A version dir no manifest entry
+    references any more is removed by gc(), which the consumer runs after
+    each committed batch."""
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
         self.spark = spark
@@ -169,13 +199,16 @@ class BucketedParquetKeyValueTarget:
         live = {b: manifest[str(b)] for b in buckets if str(b) in manifest}
         if not live:
             return self.spark.createDataFrame([], TARGET_SCHEMA)
-        version_of = F.create_map(*[F.lit(x) for kv in live.items() for x in kv])
         paths = [f"{self.path}/v{v}" for v in sorted(set(live.values()))]
+        # one SQL string, not a py4j call per literal
+        buckets_in = ", ".join(map(str, live))
+        version_of = ", ".join(f"{b}, {v}" for b, v in live.items())
         return (
             self.spark.read.schema(STORED_SCHEMA)
             .parquet(*paths)
-            .filter(F.col("__bucket").isin(list(live)))
-            .filter(version_of[F.col("__bucket")] == F.col("__version"))
+            .filter(
+                F.expr(f"__bucket IN ({buckets_in}) AND map({version_of})[__bucket] = __version")
+            )
             .select(*TARGET_COLS)
         )
 
@@ -215,7 +248,7 @@ class BucketedParquetKeyValueTarget:
         """Persist the post-apply state of the batch's buckets as a new
         version, then commit the manifest. `new_state` must be the full new
         content of exactly those buckets (which apply_cdc_batch over
-        read_for's slice produces)."""
+        read_for's slice produces, as does the consumer's window merge)."""
         manifest = self._manifest()
         if touched is None:
             touched = self.touched_buckets(batch)
@@ -249,8 +282,10 @@ class BucketedParquetKeyValueTarget:
         time AFTER in-flight writes finish: a concurrent writer's new
         version dir is unreferenced until its manifest commit, so gc must
         not race an active write_for — the consumer is single-process by
-        the checkpoint lock, making 'between batches' the natural slot.
-        Returns the removed dir paths."""
+        the checkpoint lock, making 'between batches' the natural slot,
+        and it runs gc there. A reader still holding an older manifest may
+        find the version dirs it points to gone. Returns the removed dir
+        paths."""
         import os
         import re
         import shutil
@@ -316,54 +351,56 @@ class WalStreamConsumer:
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
-        reduced = last_op_per_key(batch_df)
-        # the batch's one stats action; the last-op reduction keeps each
-        # key's max id, so max(id) equals the raw batch's
-        n_batch, max_id, touched = reduced.agg(
-            F.count(F.lit(1)), F.max("id"), F.collect_set(self.target.bucket_expr())
+        # the batch's stats action, over the raw records: the per-key
+        # reduction keeps every key and each key's max id, so max(id) and
+        # the touched buckets equal the reduced batch's
+        max_id, touched = batch_df.agg(
+            F.max("id"), F.collect_set(self.target.bucket_expr())
         ).first()
         stats_s = time.monotonic() - t0
-        if n_batch == 0:
+        if max_id is None:
             self.metrics.set_state(WalState.EMPTY)
             return
         self.metrics.set_state(WalState.NOT_EMPTY)
         touched = sorted(touched)
 
         # read only the state slice the batch can touch
-        current = self.target.read_for(reduced, touched)
-        upserts = reduced.filter(F.col("operation") != Operation.DELETE)
-        new_state = current.join(
-            reduced.select("entity_id"), "entity_id", "left_anti"
-        ).unionByName(upserts.select(*TARGET_COLS))
+        merged = _window_merge(batch_df, self.target.read_for(batch_df, touched))
+        from_batch = F.col("__src") == _BATCH
+        reduced = last_op_per_key(batch_df) if self.callback is not None else None
 
-        already = None
         attempt = 0
-        r10_s = write_s = 0.0
         while True:  # R9: retry IO failures forever (bounded only if configured)
             try:
-                if self.callback is not None and not self.callback(reduced):
+                if reduced is not None and not self.callback(reduced):
                     # callback returning False == "was already done"
                     # (WalEntityConsumerCallback.java:10-17)
-                    already = n_batch
+                    n_batch = already = reduced.count()
+                    write_s = 0.0
                     break
-                if already is None:
-                    # R10: upserts whose payload is already in the target
-                    # were applied before a replay
-                    t = time.monotonic()
-                    already = (
-                        upserts.join(
-                            current.select(
-                                "entity_id", F.col("entity_bytes").alias("__tgt_bytes")
-                            ),
-                            "entity_id",
-                        )
-                        .filter(F.col("entity_bytes") == F.col("__tgt_bytes"))
-                        .count()
+                # an Observation serves one action, so each attempt gets its
+                # own: the counts come from the write that succeeded
+                obs = Observation()
+                new_state = (
+                    merged.observe(
+                        obs,
+                        F.count_if(from_batch).alias("n_batch"),
+                        # R10: an upsert whose payload the target already
+                        # holds was applied before a replay
+                        F.count_if(
+                            from_batch
+                            & (F.col("operation") != Operation.DELETE)
+                            & (F.col("entity_bytes") == F.col("__old"))
+                        ).alias("already"),
                     )
-                    r10_s = time.monotonic() - t
+                    .filter(~F.col("operation").eqNullSafe(Operation.DELETE))
+                    .select(*TARGET_COLS)
+                )
                 t = time.monotonic()
-                self.target.write_for(new_state, reduced, touched)
+                self.target.write_for(new_state, batch_df, touched)
                 write_s = time.monotonic() - t
+                counts = obs.get
+                n_batch, already = counts["n_batch"], counts["already"]
                 break
             except InterruptedError:
                 raise
@@ -378,13 +415,15 @@ class WalStreamConsumer:
                     raise
                 time.sleep(self.sleep_on_io_failure)
 
+        # versions no manifest entry references any more; the checkpoint
+        # lock makes this consumer the target's only writer
+        self.target.gc()
         m = self.metrics
         m.num_ignored_already_done += already
         m.num_synchronized += n_batch - already
         self._record_applied(max_id)
         m.last_batch_records, m.last_batch_touched_buckets = n_batch, len(touched)
         m.last_batch_stats_seconds = stats_s
-        m.last_batch_r10_seconds = r10_s
         m.last_batch_write_seconds = write_s
         m.last_batch_apply_seconds = time.monotonic() - t0
 

@@ -33,15 +33,17 @@ class ConsumerMetrics:
     num_ignored_already_done: int = 0
     num_io_failures: int = 0
     backlog: int = 0
-    #: the last applied micro-batch: reduced records, touched buckets and
-    #: apply wall time, from the consumer's per-batch aggregate, and the
-    #: wall time of its stats aggregate, R10 count and target write
+    #: the last applied micro-batch: its distinct keys (the reduced
+    #: records), counted by the target write's Observation; the buckets it
+    #: touched, from the stats aggregate; and the wall time of the apply,
+    #: the stats aggregate and the target write
     last_batch_records: int = 0
     last_batch_touched_buckets: int = 0
     last_batch_apply_seconds: float = 0.0
     last_batch_stats_seconds: float = 0.0
-    last_batch_r10_seconds: float = 0.0
     last_batch_write_seconds: float = 0.0
+    #: the last trigger's StreamingQueryProgress.durationMs (phase -> ms)
+    last_trigger_ms: dict[str, int] = field(default_factory=dict)
     _not_empty_since: float | None = field(default=None, repr=False)
     _not_empty_accum: float = field(default=0.0, repr=False)
 
@@ -75,15 +77,15 @@ class ConsumerMetrics:
             f"{p}_last_batch_touched_buckets": self.last_batch_touched_buckets,
             f"{p}_last_batch_apply_seconds": self.last_batch_apply_seconds,
             f"{p}_last_batch_stats_seconds": self.last_batch_stats_seconds,
-            f"{p}_last_batch_r10_seconds": self.last_batch_r10_seconds,
             f"{p}_last_batch_write_seconds": self.last_batch_write_seconds,
+            **{f"{p}_last_trigger_{k}_ms": v for k, v in self.last_trigger_ms.items()},
         }
 
 
 class WalQueryListener(StreamingQueryListener):
     """Maps StreamingQueryProgress onto the reference's state gauge:
     0 input rows in a trigger ⇒ EMPTY (R12), rows ⇒ NOT_EMPTY, exception ⇒
-    INACCESSIBLE_IO_FAILURE (R13)."""
+    INACCESSIBLE_IO_FAILURE (R13); keeps the trigger's durationMs."""
 
     def __init__(self, metrics: ConsumerMetrics):
         self.metrics = metrics
@@ -93,6 +95,7 @@ class WalQueryListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         rows = event.progress.numInputRows
+        self.metrics.last_trigger_ms = dict(event.progress.durationMs)
         # R14 backlog gauge lives on WalStreamConsumer.backlog() (cached
         # COUNT of unconsumed ids, the reference's semantics); the trigger's
         # input rows only drive the EMPTY/NOT_EMPTY state machine here.
