@@ -79,6 +79,21 @@ FAST_PRIORITY: tuple[str, ...] = (
 )
 
 
+#: Parity names kept in the fast tier although they left DRIVER_WINDOW:
+#: the window holds exactly 50 names, and these four certified graph
+#: queries gave their slots to the cdc_* queries whose apply moved onto
+#: operators.cdc.merge_cdc. Their DuckDB check still runs on every
+#: default run, so freeing a window slot never drops a fast-tier check.
+FAST_PARITY_EXTRA: frozenset[str] = frozenset(
+    {
+        "graph_community_modularity",
+        "graph_ktruss_edges",
+        "graph_label_propagation",
+        "graph_louvain_first_sweep",
+    }
+)
+
+
 def _module_name(item) -> str:
     return item.nodeid.split("::", 1)[0].rsplit("/", 1)[-1].removesuffix(".py")
 
@@ -88,7 +103,7 @@ def pytest_collection_modifyitems(config, items):
         return
     from wal_consumer_spark.plans.registry import DRIVER_WINDOW
 
-    window = set(DRIVER_WINDOW)
+    window = set(DRIVER_WINDOW) | FAST_PARITY_EXTRA
     skip_slow = pytest.mark.skip(
         reason="slow tier — run with WCS_SLOW_TESTS=1 (full tier executed "
         "green before this round's final commit; fast tier keeps the "
@@ -103,7 +118,8 @@ def pytest_collection_modifyitems(config, items):
             # full 540-query parity is the slow tier; the fast tier keeps
             # the DuckDB oracle check for every DRIVER_WINDOW name — a
             # superset of every query whose closure changed this round
-            # (the stale-certification gate enforces that containment)
+            # (the stale-certification gate enforces that containment) —
+            # plus the FAST_PARITY_EXTRA names displaced from the window
             qname = item.name[len("test_query_parity[") : -1]
             if qname not in window:
                 item.add_marker(skip_slow)

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 
 from wal_consumer_spark.operators.cdc import (
     apply_cdc_batch,
-    count_already_applied,
     last_op_per_key,
+    merge_cdc,
 )
 
 WAL_COLS = "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, entity_type STRING"
@@ -84,7 +84,9 @@ def test_replay_is_idempotent_and_counted(spark):
     assert _target_as_dict(replayed) == _target_as_dict(applied)
     last = last_op_per_key(wal)
     n_upsert_keys = last.filter(F.col("operation") != "DELETE").count()
-    assert count_already_applied(applied, wal) == n_upsert_keys
+    merged = merge_cdc(applied, wal)
+    assert merged.filter("__already_done").count() == n_upsert_keys
+    assert merged.filter("__from_batch").count() == last.count()
 
 
 def test_last_op_reduction(spark):

@@ -319,8 +319,8 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-from wal_consumer_spark.operators.cdc import apply_cdc_batch
 from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget
+from wal_consumer_spark.streaming.consumer import apply_to_target
 
 records = json.load(open(records_path))
 n_batches = len(records) // batch_size
@@ -362,9 +362,8 @@ for i in range(k, n_batches):
         "entity_bytes BINARY, entity_type STRING",
     )
     journal("start " + str(i))
-    touched = target.touched_buckets(batch)
-    st = target.read_for(batch, touched)
-    target.write_for(apply_cdc_batch(st, batch), batch, touched)
+    touched = sorted(r[0] for r in batch.select(target.bucket_expr()).distinct().collect())
+    apply_to_target(target, batch, touched)
     journal("committed " + str(i))
 
 journal("done")

@@ -115,6 +115,11 @@ def _write_wal(path: str, records: list[tuple], mtime: int) -> None:
     os.utime(path, (mtime, mtime))  # the file source reads oldest first
 
 
+def _touched(target, batch) -> set[int]:
+    """The buckets the batch's keys hash into."""
+    return {r[0] for r in batch.select(target.bucket_expr()).distinct().collect()}
+
+
 def _state(target) -> dict:
     return {r.entity_id: bytes(r.entity_bytes) for r in target.read().collect()}
 
@@ -200,7 +205,7 @@ def test_versions_are_flat_and_sorted_on_the_bucket(spark, applied):
     assert rows.filter(F.col("__version") != 1 + N_FILES).count() == 0
     wal = spark.read.parquet(f"{root}/wal/part-{N_FILES - 1:04d}.parquet")
     written = {r[0] for r in rows.select("__bucket").distinct().collect()}
-    assert written == set(target.touched_buckets(wal))
+    assert written == _touched(target, wal)
     assert len(written) == N_BUCKETS  # 640 records touch every bucket
 
 
@@ -329,7 +334,7 @@ def test_a_failed_write_is_counted_once(spark, tmp_path):
     class FlakyTarget(BucketedParquetKeyValueTarget):
         failures = 1
 
-        def write_for(self, new_state, batch, touched=None):
+        def write_for(self, new_state, batch, touched):
             if self.failures:
                 self.failures -= 1
                 new_state.take(1)  # a write that dies after its first rows
@@ -396,7 +401,8 @@ def test_failed_applied_id_write_warns(spark, tmp_path):
 def test_routed_state_survives_restarted_routers(spark, tmp_path):
     """Each routed batch goes through a fresh TypeRoutedTarget on the same
     base path, as after a process restart: every type's state equals a dict
-    oracle, and a fresh router lists every type. `account` reuses
+    oracle, a fresh router lists every type, and each type dir holds
+    exactly the version dirs its manifest references. `account` reuses
     entity_id 1 of `user`."""
     base = str(tmp_path / "routed")
     batches = [
@@ -420,6 +426,10 @@ def test_routed_state_survives_restarted_routers(spark, tmp_path):
     restarted = TypeRoutedTarget(spark, base)
     assert restarted.types() == ["account", "user"]
     assert {t: _state(restarted.target_for(t)) for t in restarted.types()} == oracle
+    for t in restarted.types():
+        target = restarted.target_for(t)
+        live = {f"v{v}" for v in target._manifest().values()}
+        assert {n for n in os.listdir(target.path) if n.startswith("v")} == live, t
 
 
 def test_second_consumer_on_an_active_checkpoint_fails_fast(spark, tmp_path):
@@ -474,7 +484,8 @@ def test_superseded_rows_do_not_come_back(spark, tmp_path):
         return sorted((r.entity_id, bytes(r.entity_bytes)) for r in df.collect())
 
     assert rows(target.read()) == sorted(oracle.items())
-    slice_ = target.read_for(_batch(spark, [(6, kb2, "UPDATE", b"x"), (7, kc2, "UPDATE", b"y")]))
+    batch = _batch(spark, [(6, kb2, "UPDATE", b"x"), (7, kc2, "UPDATE", b"y")])
+    slice_ = target.read_for(batch, sorted(_touched(target, batch)))
     assert rows(slice_) == sorted(oracle.items())  # every key lives in b or c
 
 

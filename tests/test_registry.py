@@ -161,10 +161,17 @@ def test_oracle_less_specs_sort_last():
 #: plan rewrites, so the round-13 driver run re-certifies them against
 #: the oracle. (The round-12 load_table re-pins are green in
 #: CORRECTNESS_r12 and rotated out; they no longer need allowlisting.)
+#: The four cdc_* names are re-pinned after their apply moved onto the
+#: shared merge_cdc window; the four graph re-pins whose slots they took
+#: are green in CORRECTNESS_r13 and leave the allowlist with the window.
 _REPIN_ALLOWLIST: frozenset[str] = frozenset(
     {
         "analytics_market_basket",
         "analytics_shapley_attribution",
+        "cdc_apply_final_state",
+        "cdc_replay_idempotency",
+        "cdc_shuffled_replay_equivalence",
+        "cdc_state_asof",
         "dedup_clusters_cc",
         "dedup_containment_pairs",
         "dedup_lsh_band_sensitivity",
@@ -176,7 +183,6 @@ _REPIN_ALLOWLIST: frozenset[str] = frozenset(
         "dq_referential_integrity_audit",
         "graph_adamic_adar",
         "graph_bfs_distance_histogram",
-        "graph_community_modularity",
         "graph_connected_components",
         "graph_copurchase_degree",
         "graph_degree_assortativity",
@@ -188,10 +194,7 @@ _REPIN_ALLOWLIST: frozenset[str] = frozenset(
         "graph_jaccard_neighbors",
         "graph_kcore_bounded_peel",
         "graph_kcore_peel",
-        "graph_ktruss_edges",
-        "graph_label_propagation",
         "graph_landmark_distance_profile",
-        "graph_louvain_first_sweep",
         "graph_rich_club_coefficient",
         "graph_triangle_participation",
         "pipeline_cluster_representative",

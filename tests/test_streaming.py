@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wal_consumer_spark.streaming import BucketedParquetKeyValueTarget, WalStreamConsumer
+from wal_consumer_spark.streaming.consumer import apply_to_target
 
 WAL_COLS = "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, entity_type STRING"
 
@@ -33,6 +34,14 @@ def _state(target):
         r.entity_id: bytes(r.entity_bytes).decode()
         for r in target.read().collect()
     }
+
+
+def _apply(target, batch):
+    """One batch through the consumer's apply, onto the buckets its keys
+    hash into."""
+    touched = sorted(r[0] for r in batch.select(target.bucket_expr()).distinct().collect())
+    apply_to_target(target, batch, touched)
+    return touched
 
 
 def _drain(consumer):
@@ -251,25 +260,20 @@ def test_bucketed_target_rewrites_only_touched_buckets(spark, tmp_path):
     'What's wrong' #4; reference delete+commit WalHeadHandle.java:29-42)."""
     import glob
 
-    from wal_consumer_spark.operators.cdc import last_op_per_key, apply_cdc_batch
-
     tgt = str(tmp_path / "tgt")
     target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
     seed = spark.createDataFrame(
         [(i, i, "ADD", f"v{i}".encode(), "T") for i in range(1, 41)],
         WAL_COLS,
     )
-    reduced = last_op_per_key(seed)
-    target.write_for(apply_cdc_batch(target.read_for(reduced), reduced), reduced)
+    _apply(target, seed)
     manifest_before = target._manifest()
     files_before = set(glob.glob(f"{tgt}/v*/*.parquet"))
     assert len(manifest_before) > 1  # state spans several buckets
 
     one = spark.createDataFrame([(100, 7, "UPDATE", b"v7b", "T")], WAL_COLS)
-    red1 = last_op_per_key(one)
-    touched = target.touched_buckets(red1)
+    touched = _apply(target, one)
     assert len(touched) == 1
-    target.write_for(apply_cdc_batch(target.read_for(red1), red1), red1)
     manifest_after = target._manifest()
 
     # only the touched bucket advanced its version
@@ -436,14 +440,11 @@ def test_bucketed_target_replay_after_crash_no_duplicates(spark, tmp_path):
     foreachBatch replay recomputes the same version number — the write must
     OVERWRITE the partial attempt, not append to it, or every row of the
     first attempt is duplicated in the committed state."""
-    from wal_consumer_spark.operators.cdc import apply_cdc_batch, last_op_per_key
-
     tgt = str(tmp_path / "tgt")
     target = BucketedParquetKeyValueTarget(spark, tgt, n_buckets=4)
     seed = spark.createDataFrame(
         [(i, i, "ADD", f"v{i}".encode(), "T") for i in range(1, 9)], WAL_COLS
     )
-    reduced = last_op_per_key(seed)
 
     real_commit = target._commit_manifest
     crashed = {"n": 0}
@@ -454,7 +455,7 @@ def test_bucketed_target_replay_after_crash_no_duplicates(spark, tmp_path):
 
     target._commit_manifest = crashing_commit
     try:
-        target.write_for(apply_cdc_batch(target.read_for(reduced), reduced), reduced)
+        _apply(target, seed)
     except RuntimeError:
         pass
     assert crashed["n"] == 1
@@ -462,7 +463,7 @@ def test_bucketed_target_replay_after_crash_no_duplicates(spark, tmp_path):
 
     # foreachBatch replay: same batch against the same (empty) manifest
     target._commit_manifest = real_commit
-    target.write_for(apply_cdc_batch(target.read_for(reduced), reduced), reduced)
+    _apply(target, seed)
     rows = target.read().collect()
     assert len(rows) == 8  # one row per key — no duplicated first attempt
     assert _state(target) == {i: f"v{i}" for i in range(1, 9)}
@@ -526,16 +527,13 @@ def test_bucketed_target_gc_removes_only_unreferenced_versions(spark, tmp_path):
     sweep."""
     import os
 
-    from wal_consumer_spark.operators.cdc import apply_cdc_batch, last_op_per_key
-
     target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=4)
     for step in range(3):  # three writes to the same key: two dead versions
         one = spark.createDataFrame(
             [(step + 1, 1, "ADD" if step == 0 else "UPDATE", f"v{step}".encode(), "T")],
             WAL_COLS,
         )
-        red = last_op_per_key(one)
-        target.write_for(apply_cdc_batch(target.read_for(red), red), red)
+        _apply(target, one)
     before = _state(target)
     removed = target.gc()
     assert len(removed) == 2  # v1, v2 superseded; v3 referenced

@@ -10,9 +10,12 @@ records reduces to the last op per key (by `id`) and applies as one MERGE:
 - WHEN MATCHED AND op != DELETE -> update      (WalConsumerTest.java:121-124)
 - WHEN NOT MATCHED AND op != DELETE -> insert  (WalConsumerTest.java:117-120)
 
-Expressed Spark-first as anti-join + union (no row-at-a-time loop); both
-sides shuffle once on the key, and the WAL batch side is typically small
-enough for a broadcast anti-join at micro-batch cadence.
+Expressed Spark-first as one window per `entity_id` over the batch's
+records and the target's rows (`merge_cdc`, no row-at-a-time loop): the
+batch's last op wins over the target row, and the same window carries the
+target's old payload, so the R10 already-done count (WalConsumer.java:
+271-278) is a flag on the winning row, not a second join. The streaming
+consumer, the type router and the batch plans all apply through it.
 """
 
 from __future__ import annotations
@@ -42,31 +45,42 @@ def last_op_per_key(
     )
 
 
-def apply_cdc_batch(
-    target: DataFrame, wal_batch: DataFrame, key: str = "entity_id"
-) -> DataFrame:
-    """Apply a WAL batch to the keyed target; returns the new target state."""
-    last = last_op_per_key(wal_batch, key=key)
-    untouched = target.join(last.select(key), on=key, how="left_anti")
-    upserts = last.filter(F.col("operation") != Operation.DELETE).select(
-        key, "entity_bytes", "entity_type"
+def merge_cdc(target: DataFrame, wal_batch: DataFrame) -> DataFrame:
+    """R6-R8 and R10 as one window over the batch's records and the target:
+    per `entity_id`, the winning row is the batch's last op by `id`, or the
+    target row when the batch does not hold the key (its `id` and
+    `operation` are then NULL). Each winner carries two flags:
+    `__from_batch` (the batch holds the key) and `__already_done` (a
+    winning upsert whose payload the target already holds: it was applied
+    before a replay). Winning DELETEs stay in; drop_deletes removes them."""
+    rows = wal_batch.withColumn("__from_batch", F.lit(True)).unionByName(
+        target.withColumn("__from_batch", F.lit(False)), allowMissingColumns=True
     )
-    return untouched.unionByName(upserts)
-
-
-def count_already_applied(
-    target: DataFrame, wal_batch: DataFrame, key: str = "entity_id"
-) -> int:
-    """R10 idempotency observability (WalConsumer.java:271-278): how many
-    upserts in this batch are no-ops because the target already holds the
-    identical payload (i.e. the record was applied before a replay)."""
-    last = last_op_per_key(wal_batch, key=key).filter(
-        F.col("operation") != Operation.DELETE
+    w = Window.partitionBy("entity_id").orderBy(
+        F.col("__from_batch").desc(), F.col("id").desc()
+    )
+    old = F.max(F.when(~F.col("__from_batch"), F.col("entity_bytes"))).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     return (
-        last.join(
-            target.select(key, F.col("entity_bytes").alias("__tgt_bytes")), on=key
+        rows.withColumns({"__rn": F.row_number().over(w), "__old": old})
+        .filter(F.col("__rn") == 1)
+        .withColumn(
+            "__already_done",
+            F.col("__from_batch")
+            & (F.col("operation") != Operation.DELETE)
+            & F.coalesce(F.col("entity_bytes") == F.col("__old"), F.lit(False)),
         )
-        .filter(F.col("entity_bytes") == F.col("__tgt_bytes"))
-        .count()
+        .drop("__rn", "__old")
     )
+
+
+def drop_deletes(merged: DataFrame) -> DataFrame:
+    """The target state a merge_cdc result leaves: every winner but the
+    DELETEs, as target rows."""
+    return merged.filter(~F.col("operation").eqNullSafe(Operation.DELETE)).select(*TARGET_COLS)
+
+
+def apply_cdc_batch(target: DataFrame, wal_batch: DataFrame) -> DataFrame:
+    """Apply a WAL batch to the keyed target; returns the new target state."""
+    return drop_deletes(merge_cdc(target, wal_batch))

@@ -15,8 +15,9 @@ can replay the same semantics:
 Applying the WAL in id order to an empty keyed target and reading the final
 state is equivalent (per SURVEY.md §4.3: ops on different keys commute) to
 keeping each key's last op and dropping DELETEs — which is exactly what
-`operators.cdc.apply_cdc_batch` computes with one window + anti-join/union,
-and what the SQL oracle replays with a window function.
+`operators.cdc.apply_cdc_batch` computes with the one `merge_cdc` window the
+streaming consumer also applies through, and what the SQL oracle replays
+with a window function.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wal_consumer_spark.operators.broadcast import maybe_broadcast
-from wal_consumer_spark.operators.cdc import apply_cdc_batch, last_op_per_key
+from wal_consumer_spark.operators.cdc import apply_cdc_batch, last_op_per_key, merge_cdc
 from wal_consumer_spark.plans.registry import register
 
 from wal_consumer_spark.sources.tables import load_table
@@ -188,21 +189,10 @@ def cdc_replay_idempotency(spark: SparkSession, sf_dir: str) -> DataFrame:
     wal = synthetic_wal(spark, sf_dir)
     empty_target = spark.createDataFrame([], "entity_id LONG, entity_bytes BINARY, entity_type STRING")
     applied = apply_cdc_batch(empty_target, wal)
-    last = last_op_per_key(wal)
-    upserts = last.filter(F.col("operation") != "DELETE")
-    already = (
-        upserts.join(
-            applied.select("entity_id", F.col("entity_bytes").alias("tgt_bytes")),
-            on="entity_id",
-        )
-        .filter(F.col("entity_bytes") == F.col("tgt_bytes"))
-        .count()
-    )
-    deletes = last.filter(F.col("operation") == "DELETE").join(
-        applied.select("entity_id"), on="entity_id", how="left_anti"
-    ).count()
-    return spark.createDataFrame(
-        [(already, deletes)], "already_done LONG, absent LONG"
+    # the replay's winning DELETEs name keys the applied state no longer holds
+    return merge_cdc(applied, wal).agg(
+        F.count_if("__already_done").alias("already_done"),
+        F.count_if(F.col("operation") == "DELETE").alias("absent"),
     )
 
 

@@ -55,8 +55,20 @@ _REGISTRY: dict[str, QuerySpec] = {}
 #: from builder-claimed-correct to driver-certified, plus 7 of the 12
 #: round-12 staged names (including graph_harmonic_centrality, which
 #: carries the semantics-sensitive parity-BFS rewrite). 43 + 7 = 50.
+#:
+#: The CDC apply then moved onto one window merge (operators.cdc.merge_cdc)
+#: shared with the streaming consumer, which changed the closures of four
+#: certified cdc_* queries. They take the slots of four re-pins that
+#: CORRECTNESS_r13 already certified green (graph_community_modularity,
+#: graph_ktruss_edges, graph_label_propagation, graph_louvain_first_sweep).
 DRIVER_WINDOW: list[str] = [
-    # --- stale-certification re-pins: the 43 names whose dependency
+    # --- stale-certification re-pins: the four cdc_* queries whose apply
+    # --- moved onto merge_cdc ---
+    "cdc_apply_final_state",
+    "cdc_replay_idempotency",
+    "cdc_shuffled_replay_equivalence",
+    "cdc_state_asof",
+    # --- stale-certification re-pins: 39 of the 43 names whose dependency
     # --- closures changed under the round-12 optimization rewrites
     # --- (CC star-round windows, HITS/eigen/label-prop window rounds,
     # --- shared tokenization, basket spread, parity BFS, shapley/DSIR/
@@ -76,7 +88,6 @@ DRIVER_WINDOW: list[str] = [
     "dq_referential_integrity_audit",
     "graph_adamic_adar",
     "graph_bfs_distance_histogram",
-    "graph_community_modularity",
     "graph_connected_components",
     "graph_copurchase_degree",
     "graph_degree_assortativity",
@@ -88,10 +99,7 @@ DRIVER_WINDOW: list[str] = [
     "graph_jaccard_neighbors",
     "graph_kcore_bounded_peel",
     "graph_kcore_peel",
-    "graph_ktruss_edges",
-    "graph_label_propagation",
     "graph_landmark_distance_profile",
-    "graph_louvain_first_sweep",
     "graph_rich_club_coefficient",
     "graph_triangle_participation",
     "pipeline_cluster_representative",

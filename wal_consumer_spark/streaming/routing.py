@@ -9,11 +9,13 @@ targets with the same per-key ordering and merge semantics.
 
 Correctness note: in a shared WAL, `entity_id` is only unique *within* a
 type, so the last-op reduction must key on (entity_type, entity_id) — done
-here by reducing each type's sub-batch independently, which also keeps each
-target's apply identical to the single-type path (operators/cdc.py).
-The per-type loop is driver-side but bounded by the number of entity
-*classes* (a handful), never by data volume; each iteration is a fully
-distributed filter+merge.
+here by applying each type's sub-batch on its own, through the consumer's
+apply (streaming/consumer.py:apply_to_target, the operators.cdc.merge_cdc
+window). One grouped aggregate over the batch yields each type and the
+buckets its keys touch; the per-type loop is driver-side but bounded by the
+number of entity *classes* (a handful), never by data volume, and each
+iteration is one distributed filter+merge+write, followed by the type's
+gc() of the versions its manifest no longer references.
 
 Each type's state is a BucketedParquetKeyValueTarget under
 `base_path/<entity_type>`: manifest-committed on disk, so it is safe across
@@ -28,8 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wal_consumer_spark.operators.cdc import apply_cdc_batch
-from wal_consumer_spark.streaming.consumer import BucketedParquetKeyValueTarget
+from wal_consumer_spark.streaming.consumer import BucketedParquetKeyValueTarget, apply_to_target
 
 
 class TypeRoutedTarget:
@@ -54,43 +55,14 @@ class TypeRoutedTarget:
         return sorted(n for n in names if os.path.isfile(self.target_for(n)._manifest_path()))
 
     def apply_batch(self, wal_batch: DataFrame) -> None:
-        """Apply one WAL micro-batch, routed by entity_type. Each type's
-        sub-batch goes through the standard last-op-per-key merge against
-        the buckets it touches in that type's target.
-
-        One distributed pass: the batch is staged ONCE, partitioned by
-        entity_type, and the partition directory names ARE the distinct
-        type set — read back from filesystem metadata, so there is no
-        per-trigger `distinct().collect()` Spark job (VERDICT r2 "What's
-        wrong" #3), and the per-type merges scan only their own partition
-        instead of re-filtering (and recomputing) the whole batch subtree
-        per type."""
-        staging = f"{self.base_path}/_batch_staging"
-        (
-            wal_batch.write.partitionBy("entity_type")
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        jvm = self.spark._jvm
-        staging_path = jvm.org.apache.hadoop.fs.Path(staging)
-        fs = staging_path.getFileSystem(
-            self.spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-        )
-        batch_types = sorted(
-            st.getPath().getName().split("=", 1)[1]
-            for st in fs.listStatus(staging_path)
-            if st.isDirectory() and st.getPath().getName().startswith("entity_type=")
-        )
-        for etype in batch_types:
+        """Apply one WAL micro-batch, routed by entity_type: one aggregate
+        collects each type's touched buckets (every type's target has the
+        default n_buckets, so one bucket expression serves all), then each
+        type's sub-batch is applied to its target and the target's dead
+        versions are swept."""
+        bucket = BucketedParquetKeyValueTarget(self.spark, self.base_path).bucket_expr()
+        touched = wal_batch.groupBy("entity_type").agg(F.collect_set(bucket)).collect()
+        for etype, buckets in touched:
             tgt = self.target_for(etype)
-            # basePath keeps the entity_type partition column in the schema;
-            # pointing at the single partition dir prunes the scan to it.
-            sub = (
-                self.spark.read.option("basePath", staging)
-                .parquet(f"{staging}/entity_type={etype}")
-                # partition-dir values are type-inferred on read; a
-                # numeric-looking type name must stay a string
-                .withColumn("entity_type", F.col("entity_type").cast("string"))
-            )
-            touched = tgt.touched_buckets(sub)
-            tgt.write_for(apply_cdc_batch(tgt.read_for(sub, touched), sub), sub, touched)
+            apply_to_target(tgt, wal_batch.filter(F.col("entity_type") == etype), sorted(buckets))
+            tgt.gc()
