@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
+import subprocess
 import sys
 import time
 
@@ -318,27 +320,33 @@ def latest_committed_normalized(
 ISOLATION_MAX_RUNS = 6
 
 
-def isolate_one(name: str, sf_dir: str, n: int = 5) -> dict | None:
+def isolate_one(name: str, sf_dir: str, n: int = 5, env: dict | None = None) -> dict | None:
     """Measure one query in a FRESH JVM that runs nothing else
-    (tools/bench_one.py as a subprocess) and return its JSON record —
-    the same measurement the round-9..11 manual triages ran by hand.
-    None on any failure: isolation is evidence-gathering, never a way
-    to crash the bench."""
-    import subprocess
-
+    (tools/bench_one.py as a subprocess, under `env` if given) and return
+    its JSON record. None on a non-zero exit, a timeout or output with no
+    JSON line: isolation is evidence-gathering, never a way to crash the
+    bench. A failed run writes its return code and stderr tail to stderr,
+    so the record's missing row has a visible cause."""
     here = os.path.dirname(os.path.abspath(__file__))
+    cmd = [sys.executable, os.path.join(here, "tools", "bench_one.py"), name, str(n), sf_dir]
     try:
-        proc = subprocess.run(
-            [sys.executable, os.path.join(here, "tools", "bench_one.py"),
-             name, str(n), sf_dir],
-            capture_output=True, text=True, timeout=1800,
-        )
-        for line in reversed(proc.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
-    except Exception:
-        pass
+        proc = subprocess.run(cmd, capture_output=True, text=True, timeout=3600, env=env)
+    except (subprocess.SubprocessError, OSError) as ex:
+        why, err = f"{type(ex).__name__}: {ex}", getattr(ex, "stderr", None)
+    else:
+        why, err = f"return code {proc.returncode}", proc.stderr
+        if proc.returncode == 0:
+            for line in reversed(proc.stdout.splitlines()):
+                if line.startswith("{"):
+                    try:
+                        return json.loads(line)
+                    except json.JSONDecodeError:
+                        break
+            why += ", no parseable JSON line on stdout"
+    if isinstance(err, bytes):
+        err = err.decode(errors="replace")
+    tail = "\n".join((err or "").splitlines()[-20:])
+    print(f"isolate_one({name}) failed: {why}; stderr tail:\n{tail}", file=sys.stderr)
     return None
 
 
@@ -486,6 +494,91 @@ def warmup(spark, sf_dir: str) -> None:
     ).write.format("noop").mode("overwrite").save()
 
 
+def calibrate(spark, sf_dir: str) -> dict:
+    """Fixed workload probes that never change across rounds, so a
+    cross-round reader can separate ENGINE deltas from ENVIRONMENT
+    deltas (observed r2->r3: every query — including ones whose plans
+    did not change at all — shifted uniformly +20-25% after a host
+    restart; without a calibration constant that reads as a fleet-wide
+    regression). cpu_sec: pure JVM codegen arithmetic, no IO.
+    scan_sec: full lineitem parquet scan+sum. Median of 5 each (was 3;
+    VERDICT r6 "What's wrong" #2: a one-shot/3-shot probe swings ±25%
+    within a session, too noisy to anchor a 1.5x tripwire), plus the
+    probe SPREAD ((max-min)/median over the cpu samples) so readers —
+    and the tripwire basis selection — can see when the normalization
+    itself is noisier than the signal it corrects. The in-suite bench and
+    every fresh-JVM run (tools/bench_one.py) take this same probe, so an
+    isolated median and an in-suite baseline share one normalization."""
+    from pyspark.sql import functions as F
+
+    def probe(fn) -> tuple[float, list[float]]:
+        fn()  # untimed probe warmup: the first execution pays the
+        # probe's own whole-stage-codegen compilation (~2.4x observed),
+        # which would otherwise dominate the spread metric and force
+        # the raw-median fallback even on a quiet host
+        ts = []
+        for _ in range(5):
+            t0 = time.perf_counter()
+            fn()
+            ts.append(round(time.perf_counter() - t0, 3))
+        return statistics.median(ts), ts
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    cpu_med, cpu_samples = probe(
+        lambda: spark.range(200_000_000)
+        .selectExpr("sum(xxhash64(id) % 1000)")  # bounded: no ANSI overflow
+        .write.format("noop").mode("overwrite").save()
+    )
+    scan_med, scan_samples = probe(
+        lambda: li.agg(
+            F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
+        ).write.format("noop").mode("overwrite").save()
+    )
+    return {
+        "cpu_sec": cpu_med,
+        "scan_sec": scan_med,
+        "cpu_samples": cpu_samples,
+        "scan_samples": scan_samples,
+        "cpu_spread": round((max(cpu_samples) - min(cpu_samples)) / cpu_med, 3)
+        if cpu_med
+        else None,
+        "n_probe": 5,
+    }
+
+
+def release_persisted(spark) -> None:
+    """Drop every persisted RDD (localCheckpoint storage included) and
+    cached plan between timed runs. The checkpointing queries (near-dup,
+    simhash, pagerank, CC) each pin block-manager storage that Spark's
+    async ContextCleaner frees only after a JVM GC notices the dropped
+    reference; across 36 queries x 3 passes the backlog grows faster than
+    GC reclaims it and later passes absorb the memory pressure (observed:
+    sim_embedding_near_dup samples 2.4s -> 3.4s -> 4.8s monotonically).
+    Deterministic release keeps pass N's storage footprint identical to
+    pass 1's."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in list(jmap.keySet().toArray()):
+        # blocking: the next query must start from the same (empty)
+        # block-manager state every pass — async release left the
+        # biggest checkpointing query's old blocks still draining when
+        # its next pass began (samples 3.4s -> 6.1s within one run)
+        jmap.get(rid).unpersist(True)
+    spark.catalog.clearCache()
+
+
+def time_query(spark, spec, sf_dir: str) -> tuple[float, float]:
+    """(total_s, construct_s) of one run of `spec` to the noop sink. The
+    span is construction + execution: some queries materialize an index
+    frame eagerly at construction (localCheckpoint in the near-dup /
+    simhash paths), and timing only the final write would let that
+    dominant cost escape the measurement."""
+    t0 = time.perf_counter()
+    df = spec.spark(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0, t1 - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -503,77 +596,7 @@ def main() -> None:
     # noisy wall-clock era doesn't bias a single query's three samples.
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-
-    def calibrate() -> dict[str, float]:
-        """Fixed workload probes that never change across rounds, so a
-        cross-round reader can separate ENGINE deltas from ENVIRONMENT
-        deltas (observed r2->r3: every query — including ones whose plans
-        did not change at all — shifted uniformly +20-25% after a host
-        restart; without a calibration constant that reads as a fleet-wide
-        regression). cpu_sec: pure JVM codegen arithmetic, no IO.
-        scan_sec: full lineitem parquet scan+sum. Median of 5 each (was 3;
-        VERDICT r6 "What's wrong" #2: a one-shot/3-shot probe swings ±25%
-        within a session, too noisy to anchor a 1.5x tripwire), plus the
-        probe SPREAD ((max-min)/median over the cpu samples) so readers —
-        and the tripwire basis selection below — can see when the
-        normalization itself is noisier than the signal it corrects."""
-
-        def med5(fn) -> tuple[float, list[float]]:
-            fn()  # untimed probe warmup: the first execution pays the
-            # probe's own whole-stage-codegen compilation (~2.4x observed),
-            # which would otherwise dominate the spread metric and force
-            # the raw-median fallback even on a quiet host
-            ts = []
-            for _ in range(5):
-                t0 = time.perf_counter()
-                fn()
-                ts.append(round(time.perf_counter() - t0, 3))
-            return sorted(ts)[2], ts
-
-        from pyspark.sql import functions as F
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        cpu_med, cpu_samples = med5(
-            lambda: spark.range(200_000_000)
-            .selectExpr("sum(xxhash64(id) % 1000)")  # bounded: no ANSI overflow
-            .write.format("noop").mode("overwrite").save()
-        )
-        scan_med, scan_samples = med5(
-            lambda: li.agg(
-                F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
-            ).write.format("noop").mode("overwrite").save()
-        )
-        return {
-            "cpu_sec": cpu_med,
-            "scan_sec": scan_med,
-            "cpu_samples": cpu_samples,
-            "scan_samples": scan_samples,
-            "cpu_spread": round((max(cpu_samples) - min(cpu_samples)) / cpu_med, 3)
-            if cpu_med
-            else None,
-            "n_probe": 5,
-        }
-
-    calibration = calibrate()
-
-    def release_persisted() -> None:
-        """Drop every persisted RDD (localCheckpoint storage included) and
-        cached plan between timed passes. The checkpointing queries
-        (near-dup, simhash, pagerank, CC) each pin block-manager storage
-        that Spark's async ContextCleaner frees only after a JVM GC notices
-        the dropped reference; across 36 queries x 3 passes the backlog
-        grows faster than GC reclaims it and later passes absorb the
-        memory pressure (observed: sim_embedding_near_dup samples
-        2.4s -> 3.4s -> 4.8s monotonically). Deterministic release keeps
-        pass N's storage footprint identical to pass 1's."""
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            # blocking: the next query must start from the same (empty)
-            # block-manager state every pass — async release left the
-            # biggest checkpointing query's old blocks still draining when
-            # its next pass began (samples 3.4s -> 6.1s within one run)
-            jmap.get(rid).unpersist(True)
-        spark.catalog.clearCache()
+    calibration = calibrate(spark, sf_dir)
 
     # One untimed full-suite pass first: the generic warmup above covers
     # scan/codegen/Arrow machinery, but each query still pays its own
@@ -582,14 +605,10 @@ def main() -> None:
     # a 17.9s one-off on dedup_minhash_lsh vs 1.5s warm). Those are
     # per-JVM costs, not per-query costs; at 100 TB a query's compile
     # milliseconds amortize over minutes of execution, so steady-state is
-    # the honest round-over-round comparator. Raw samples stay in the
-    # JSON for anyone who wants cold numbers.
-    if os.environ.get("SPARK_GRAFT_BENCH_WARMUP_PASS", "1") == "1":
-        for name in HEADLINE:
-            specs[name].spark(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            release_persisted()
+    # the honest round-over-round comparator.
+    for name in HEADLINE:
+        time_query(spark, specs[name], sf_dir)
+        release_persisted(spark)
 
     for _ in range(n_passes):
         # level the JVM heap between passes (outside any timed span):
@@ -598,25 +617,13 @@ def main() -> None:
         # lets heap pressure leak into the next pass's timings
         spark.sparkContext._jvm.System.gc()
         for name in HEADLINE:
-            # time construction + execution: some queries materialize an
-            # index frame eagerly at construction (localCheckpoint in the
-            # near-dup / simhash paths), and timing only the final write
-            # would let that dominant cost escape the measurement.
-            t0 = time.perf_counter()
-            df = specs[name].spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-            release_persisted()  # outside the timed span: bookkeeping,
+            samples[name].append(time_query(spark, specs[name], sf_dir)[0])
+            release_persisted(spark)  # outside the timed span: bookkeeping,
             # not query cost — a real pipeline unpersists when an index
             # frame's consumers finish, it doesn't hold every index ever
             # built for the session's lifetime.
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
-
-    timings = {name: round(median(xs), 3) for name, xs in samples.items()}
+    timings = {name: round(statistics.median(xs), 3) for name, xs in samples.items()}
     total = round(sum(timings.values()), 3)
     raw = {name: [round(x, 3) for x in xs] for name, xs in samples.items()}
 
@@ -685,34 +692,6 @@ def main() -> None:
             pass
     isolation = auto_isolate_flags(tripwire, prev_isolation, prev_norm, sf_dir)
 
-    # Optional second recorded basis (VERDICT r12 "Next round" #8): per-query
-    # fresh-JVM medians via tools/bench_one.py subprocesses for the N
-    # slowest in-suite queries. The in-suite series stays the primary,
-    # methodology-continuous basis (same shared-JVM span since r3); this
-    # block exists because checkpoint-heavy queries measure 30-60% LOWER in
-    # a JVM that has run nothing else, so cross-round readers need both.
-    # Env-gated OFF by default so the driver's bench wall-clock is
-    # unchanged; a committed BENCH_FRESHJVM_r{N}.json carries the round's
-    # record even if the detail file is later refreshed.
-    freshjvm_n = int(os.environ.get("SPARK_GRAFT_BENCH_FRESHJVM", "0"))
-    fresh_basis: dict[str, dict] = {}
-    if freshjvm_n:
-        for name in sorted(timings, key=lambda n: -timings[n])[:freshjvm_n]:
-            rec = isolate_one(name, sf_dir, n=3)
-            if not rec or not rec.get("median"):
-                continue
-            iso_cpu = (rec.get("calibration") or {}).get("cpu_sec")
-            fresh_basis[name] = {
-                "fresh_jvm_median_sec": rec["median"],
-                "fresh_jvm_samples": rec.get("samples"),
-                "construct_sec": rec.get("construct_sec"),
-                "calibration_cpu_sec": iso_cpu,
-                "normalized": round(rec["median"] * ANCHOR_CPU_SEC / iso_cpu, 3)
-                if iso_cpu
-                else None,
-                "in_suite_median_sec": timings[name],
-            }
-
     # Full methodology record goes to a SIDE FILE, not stdout: the grading
     # driver keeps only the last 2000 chars of stdout, and the round-3
     # record (medians + 43x3 raw samples + method text on one line) outgrew
@@ -761,582 +740,7 @@ def main() -> None:
         # session (empty when nothing flagged). Next round's triage
         # baselines against these in preference to in-suite medians.
         "isolation": isolation,
-        # Round-4 isolation of the r2->r3 dedup_minhash_lsh drift
-        # (VERDICT r3 "What's wrong" #2), measured with
-        # tools/bench_one.py in a JVM that ran NOTHING else (n=5,
-        # sf0.1): median 1.524 s, construct 0.427 s, calibration
-        # cpu_sec 0.244 vs r3's 0.208 — i.e. ~1.30 s cpu-normalized.
-        # The r3 in-suite 1.79 s median therefore decomposes into
-        # ~1.3 s true plan cost (consistent with r2's 1.14 s at r2's
-        # faster-host calibration) + ~0.3-0.5 s suite-session overhead
-        # (heap/block-manager residue across 43 queries x 3 passes in
-        # one JVM; the monotone 1.58/1.79/1.94 r3 samples are that
-        # signature). The trustable number for cross-round tracking is
-        # the fresh-JVM bench_one median.
-        # In-suite medians carry shared-JVM session overhead that grows
-        # with suite size (43 entries r3 -> 52 r4; the r3 verdict's
-        # monotone-sample signature). tools/bench_one.py medians below,
-        # measured round 4 in JVMs that ran nothing else, are the
-        # per-query plan cost to track across rounds.
-        "isolation_notes": {
-            "dedup_minhash_lsh": {
-                "fresh_jvm_median_sec": 1.524,
-                "fresh_jvm_samples": [1.489, 1.524, 1.302, 1.638, 1.653],
-                "construct_sec": 0.427,
-                "calibration_cpu_sec": 0.244,
-            },
-            "graph_jaccard_neighbors": {
-                "fresh_jvm_median_sec": 3.639,
-                "construct_sec": 2.113,  # eager co-purchase edge build
-                "calibration_cpu_sec": 0.246,
-            },
-            "ts_theil_sen_slope": {
-                "fresh_jvm_median_sec": 3.426,
-                "construct_sec": 0.707,
-                "calibration_cpu_sec": 0.274,
-            },
-            "graph_label_propagation": {
-                "fresh_jvm_median_sec": 2.704,
-                "construct_sec": 1.565,  # eager support-2 edge build
-                "calibration_cpu_sec": 0.256,
-            },
-            "text_bigram_logprob": {
-                "fresh_jvm_median_sec": 1.207,  # r3's 3.9s sample was
-                "calibration_cpu_sec": 0.212,   # session noise, not plan
-            },
-            # Round-5 isolation (VERDICT r4 "Next round" #4): every
-            # headline query that measured >= 1 s fresh-JVM now has a
-            # record. graph_connected_components' 7.03 s driver-suite
-            # number decomposes into 3.97 s one-time edge construction
-            # (eager localCheckpoint) + ~0.2 s per star round (4 rounds
-            # to fixpoint at sf0.1, converged=True per
-            # operators.graph.last_cc_stats) + suite-session residue;
-            # non-convergence at max_iter returns a correct partial
-            # contraction (over-segmentation, never over-merge) — see
-            # the connected_components docstring contract.
-            "graph_connected_components": {
-                "fresh_jvm_median_sec": 4.152,
-                "fresh_jvm_samples": [4.736, 4.162, 4.046, 3.984, 4.152],
-                "construct_sec": 3.966,
-                "calibration_cpu_sec": 0.186,
-                "rounds_to_fixpoint_sf01": 4,
-                "converged": True,
-            },
-            "agg_exact_percentile_selection": {
-                "fresh_jvm_median_sec": 1.181,
-                "construct_sec": 0.394,
-                "calibration_cpu_sec": 0.207,
-            },
-            # re-measured round 5 AFTER the size-conditional broadcast
-            # change (maybe_broadcast: hint withheld on unknown-stat
-            # checkpointed degree tables, AQE converts at runtime): no
-            # regression vs the r4 static-broadcast 3.64 s — slightly
-            # better.
-            "graph_jaccard_neighbors_r5": {
-                "fresh_jvm_median_sec": 3.354,
-                "construct_sec": 1.757,
-                "calibration_cpu_sec": 0.209,
-            },
-            "graph_degree_assortativity": {
-                "fresh_jvm_median_sec": 3.446,
-                "construct_sec": 1.656,
-                "calibration_cpu_sec": 0.242,
-            },
-            # Round-5 completion of the ">= 1 s fresh-JVM" coverage rule
-            # (VERDICT r4 "Next round" #3): every remaining headline
-            # query whose r5 in-suite median crossed 1 s, measured with
-            # tools/bench_one.py n=3 in JVMs that ran nothing else. All
-            # are at-or-below their in-suite medians — no hidden plan
-            # cost anywhere; the in-suite surplus is shared-JVM session
-            # overhead, as established in rounds 3-4.
-            "agg_rollup": {"fresh_jvm_median_sec": 1.16, "construct_sec": 0.129, "calibration_cpu_sec": 0.235},
-            "analytics_market_basket": {"fresh_jvm_median_sec": 1.937, "construct_sec": 1.331, "calibration_cpu_sec": 0.179},
-            "dq_reconcile_totals": {"fresh_jvm_median_sec": 1.033, "construct_sec": 0.25, "calibration_cpu_sec": 0.236},
-            "q1_pricing_summary": {"fresh_jvm_median_sec": 1.342, "construct_sec": 0.206, "calibration_cpu_sec": 0.195},
-            "q5_region_revenue": {"fresh_jvm_median_sec": 1.576, "construct_sec": 0.401, "calibration_cpu_sec": 0.243},
-            "sim_ann_recall_eval": {"fresh_jvm_median_sec": 1.392, "construct_sec": 0.548, "calibration_cpu_sec": 0.191},
-            "sim_embedding_near_dup": {"fresh_jvm_median_sec": 1.636, "construct_sec": 0.634, "calibration_cpu_sec": 0.238},
-            "sim_pair_distance_histogram": {"fresh_jvm_median_sec": 1.26, "construct_sec": 0.277, "calibration_cpu_sec": 0.214},
-            "text_shingle_novelty": {"fresh_jvm_median_sec": 1.495, "construct_sec": 0.195, "calibration_cpu_sec": 0.251},
-            "tpch_q18_large_volume_customer": {"fresh_jvm_median_sec": 1.305, "construct_sec": 0.319, "calibration_cpu_sec": 0.209},
-            "tpch_q21_waiting_supplier": {"fresh_jvm_median_sec": 1.429, "construct_sec": 0.424, "calibration_cpu_sec": 0.257},
-            "tpch_q9_product_profit": {"fresh_jvm_median_sec": 1.187, "construct_sec": 0.459, "calibration_cpu_sec": 0.269},
-            # Round-6 closure of the isolation-note gap (VERDICT r5 "Next
-            # round" #2): the last four headline queries >= 1 s in-suite,
-            # n=5 fresh JVMs. join_bloom_prefilter settles the r5 nominal
-            # regression permanently: 0.956 s median (samples below) vs
-            # r5's in-suite 1.37 s — the in-suite number was shared-JVM
-            # session noise on a 3-sample median, exactly as the ranges
-            # suggested; the plan cost is unchanged since round 3.
-            "join_bloom_prefilter": {
-                "fresh_jvm_median_sec": 0.956,
-                "fresh_jvm_samples": [1.332, 1.053, 0.956, 0.933, 0.947],
-                "construct_sec": 0.338,
-                "calibration_cpu_sec": 0.253,
-            },
-            "sql_front_agg_join": {
-                "fresh_jvm_median_sec": 1.095,
-                "fresh_jvm_samples": [1.261, 1.147, 1.093, 1.057, 1.095],
-                "construct_sec": 0.738,
-                "calibration_cpu_sec": 0.235,
-            },
-            "sim_doc_cosine_sparse": {
-                "fresh_jvm_median_sec": 0.856,
-                "fresh_jvm_samples": [1.049, 0.938, 0.823, 0.802, 0.856],
-                "construct_sec": 0.305,
-                "calibration_cpu_sec": 0.261,
-            },
-            # Round-7 same-round isolation for the round-6 headline
-            # entrant that crossed 1 s (VERDICT r6 "Next round" #4):
-            # fresh JVM, n=5. In line with its 2.20 s in-suite debut —
-            # no hidden plan cost; 1.12 s is the one-time bipartite
-            # edge construction (localCheckpoint), the 2 power rounds
-            # account for the rest.
-            "graph_hits_hubs_authorities": {
-                "fresh_jvm_median_sec": 2.215,
-                "fresh_jvm_samples": [2.449, 2.365, 2.179, 2.215, 2.176],
-                "construct_sec": 1.124,
-                "calibration_cpu_sec": 0.262,
-            },
-            # Round-7 same-session isolation notes for every new
-            # headline entrant >= 1 s (VERDICT r6 "Next round" #4 rule:
-            # notes land in the same session that benches them), n=3
-            # fresh JVMs. graph_ktruss_edges' 3.1 s is 2.55 s one-time
-            # co-purchase edge construction (same shared frame as the
-            # other graph entries) + two bounded peel rounds.
-            # sim_knn_label_purity was 8.85 s at 4-bit buckets with
-            # vectors carried through the collision distinct; 8-bit x 6
-            # tables + id-first distinct landed 1.76 s (the committed
-            # formulation).
-            "sim_knn_label_purity": {
-                "fresh_jvm_median_sec": 1.762,
-                "fresh_jvm_samples": [1.812, 1.762, 1.668],
-                "construct_sec": 0.354,
-                "calibration_cpu_sec": 0.231,
-            },
-            "graph_ktruss_edges": {
-                "fresh_jvm_median_sec": 3.109,
-                "fresh_jvm_samples": [3.488, 3.109, 2.797],
-                "construct_sec": 2.553,
-                "calibration_cpu_sec": 0.325,
-            },
-            "ml_ndcg_macro_summary": {
-                "fresh_jvm_median_sec": 1.056,
-                "fresh_jvm_samples": [1.468, 1.056, 1.029],
-                "construct_sec": 0.727,
-                "calibration_cpu_sec": 0.269,
-            },
-            "analytics_revenue_retention_nrr": {
-                "fresh_jvm_median_sec": 1.135,
-                "fresh_jvm_samples": [1.234, 1.135, 1.015],
-                "construct_sec": 0.759,
-                "calibration_cpu_sec": 0.214,
-            },
-            "ts_downsample_lttb": {
-                "fresh_jvm_median_sec": 1.286,
-                "fresh_jvm_samples": [1.472, 1.286, 1.178],
-                "construct_sec": 0.866,
-                "calibration_cpu_sec": 0.212,
-            },
-            # second-wave context: pipeline_dedup_cluster_sizes measures
-            # 5.41 s fresh-JVM, of which 4.94 s is the SAME eager
-            # pair-graph/CC construction dedup_clusters_cc already pays
-            # (shared machinery, not a new cost); graph_global_transitivity
-            # 2.38 s is 1.84 s shared co-purchase edge build.
-            "pipeline_contamination_report": {
-                "fresh_jvm_median_sec": 1.248,
-                "fresh_jvm_samples": [1.429, 1.248, 1.234],
-                "construct_sec": 0.908,
-                "calibration_cpu_sec": 0.257,
-            },
-            "pipeline_decontaminate": {
-                "fresh_jvm_median_sec": 0.973,
-                "fresh_jvm_samples": [1.086, 0.985, 0.904, 0.973, 0.873],
-                "construct_sec": 0.199,
-                "calibration_cpu_sec": 0.198,
-            },
-            # Round-8 backfill (VERDICT r7 "What's missing" #5): the three
-            # >= 1 s headline queries whose entry rounds predated the
-            # same-session-note rule, n=5 fresh JVMs.
-            # dq_referential_integrity_audit's cost is dominated by a
-            # one-time 1.22 s multi-table orphan-scan construction (5
-            # left-anti joins over lineitem/orders/customer/supplier/
-            # part); the rest are in line with their in-suite medians —
-            # no hidden plan cost.
-            "dq_referential_integrity_audit": {
-                "fresh_jvm_median_sec": 2.065,
-                "fresh_jvm_samples": [2.442, 2.452, 2.065, 2.039, 1.844],
-                "construct_sec": 1.223,
-                "calibration_cpu_sec": 0.257,
-            },
-            "pipeline_dsir_importance_weights": {
-                "fresh_jvm_median_sec": 1.315,
-                "fresh_jvm_samples": [1.581, 1.413, 1.303, 1.315, 1.279],
-                "construct_sec": 0.324,
-                "calibration_cpu_sec": 0.251,
-            },
-            "sim_int8_quantized_recall": {
-                "fresh_jvm_median_sec": 1.226,
-                "fresh_jvm_samples": [1.517, 1.268, 1.226, 1.047, 1.153],
-                "construct_sec": 0.492,
-                "calibration_cpu_sec": 0.254,
-            },
-            # Round-8 same-session notes for the new headline entrants
-            # >= 1 s (n=3 fresh JVMs). graph_triangle_participation
-            # debuted at 9.8 s on the FULL co-purchase projection (dense:
-            # wedge fanout ~ sum(outdeg^2)); switching to the shared
-            # support-2 edge gate landed 2.59 s, of which 2.30 s is the
-            # same one-time _support2_copurchase_edges construction the
-            # ktruss/transitivity family already pays — the marginal
-            # triangle-enumeration cost is ~0.3 s.
-            "graph_triangle_participation": {
-                "fresh_jvm_median_sec": 2.589,
-                "fresh_jvm_samples": [2.589, 2.452, 2.706],
-                "construct_sec": 2.303,
-                "calibration_cpu_sec": 0.277,
-            },
-            # Not a HEADLINE entry (it times a real availableNow streaming
-            # job, a different cost regime from the batch suite), recorded
-            # for reference: 5.37 s of the 5.50 s is constructing the
-            # 4-file ts-ordered replay source + streaming-query startup.
-            "stream_stateful_sessionize": {
-                "fresh_jvm_median_sec": 5.495,
-                "fresh_jvm_samples": [5.563, 5.495, 5.417],
-                "construct_sec": 5.366,
-                "calibration_cpu_sec": 0.234,
-            },
-            # Round-8 second wave (same-session rule, n=3 fresh JVMs).
-            # The dup matrix's cost is the shared df-capped shingle
-            # self-join (the dedup_ngram_jaccard machinery); McNemar's is
-            # the 640-row centroid join + (vec,label) distance aggregate.
-            "pipeline_cross_source_dup_matrix": {
-                "fresh_jvm_median_sec": 2.312,
-                "fresh_jvm_samples": [2.819, 2.199, 2.312],
-                "construct_sec": 0.379,
-                "calibration_cpu_sec": 0.207,
-            },
-            "ml_mcnemar_dim_ablation": {
-                "fresh_jvm_median_sec": 1.106,
-                "fresh_jvm_samples": [1.322, 1.106, 1.017],
-                "construct_sec": 0.35,
-                "calibration_cpu_sec": 0.323,
-            },
-            # Like stream_stateful_sessionize: not a HEADLINE entry (a
-            # real availableNow streaming job), recorded for reference —
-            # virtually all cost is replay-source construction + query
-            # startup (6.24 s of 6.27 s).
-            "stream_high_water_alerts": {
-                "fresh_jvm_median_sec": 6.274,
-                "fresh_jvm_samples": [8.913, 6.274, 5.586],
-                "construct_sec": 6.238,
-                "calibration_cpu_sec": 0.255,
-            },
-            # 3.48 s of 3.79 s is the 8 eager per-round checkpoints of
-            # shrinking survivor frames (the k-truss discipline; marginal
-            # per-round cost falls as the frame shrinks).
-            "graph_kcore_bounded_peel": {
-                "fresh_jvm_median_sec": 3.785,
-                "fresh_jvm_samples": [4.057, 3.785, 3.348],
-                "construct_sec": 3.481,
-                "calibration_cpu_sec": 0.24,
-            },
-            # ROUND-9 REWRITE (VERDICT r8 "What's wrong" #2): the pair
-            # join is now capped at K=16 md5-ranked ops per entity
-            # (<= 120 pairs/key instead of 19 900 at sf0.1), with an
-            # n_entities_capped in-plan certificate. Fresh-JVM cost fell
-            # 2.02 s -> 1.12 s with the cap (round-9 n=1 sample; the r8
-            # uncapped numbers kept below for the before/after record).
-            "cdc_arrival_inversion_audit": {
-                "fresh_jvm_median_sec": 1.115,
-                "fresh_jvm_samples": [1.115],
-                "construct_sec": 0.407,
-                "calibration_cpu_sec": 0.225,
-                "r8_uncapped_median_sec": 2.015,
-                "r8_uncapped_samples": [2.078, 1.873, 2.015],
-            },
-            "sql_front_named_window": {
-                "fresh_jvm_median_sec": 1.052,
-                "fresh_jvm_samples": [1.076, 1.052, 0.99],
-                "construct_sec": 0.798,
-                "calibration_cpu_sec": 0.193,
-            },
-            # 4.53 s of 4.85 s is the SAME eager pair-graph/CC build
-            # pipeline_dedup_cluster_sizes and dedup_clusters_cc already
-            # pay (shared machinery); the weight join itself is ~0.3 s.
-            "pipeline_soft_dedup_weights": {
-                "fresh_jvm_median_sec": 4.854,
-                "fresh_jvm_samples": [4.856, 4.854, 4.623],
-                "construct_sec": 4.527,
-                "calibration_cpu_sec": 0.224,
-            },
-            "sim_davies_bouldin_index": {
-                "fresh_jvm_median_sec": 1.197,
-                "fresh_jvm_samples": [1.298, 1.197, 1.041],
-                "construct_sec": 0.389,
-                "calibration_cpu_sec": 0.244,
-            },
-            "ml_fleiss_kappa_panel": {
-                "fresh_jvm_median_sec": 1.39,
-                "fresh_jvm_samples": [1.721, 1.39, 1.265],
-                "construct_sec": 0.414,
-                "calibration_cpu_sec": 0.206,
-            },
-            # Round-9 same-session notes (fresh-JVM n=3 for HEADLINE
-            # entrants, n=1 sanity for the sub-second tail; VERDICT r8
-            # "Next round" #6 + the round-4 bench-before-trusting rule).
-            # agg_rollup's r8 +44% in-suite drift resolved as host
-            # calibration + noise: fresh-JVM n=5 median 1.196 s at
-            # cpu probe 0.240 (host ~15% slower than the 0.208 anchor)
-            # -> normalized ~1.04 s vs the 0.91 s r7 basis. No plan
-            # change; no action.
-            "agg_rollup": {
-                "fresh_jvm_median_sec": 1.196,
-                "fresh_jvm_samples": [0.943, 1.29, 1.231, 1.191, 1.196],
-                "construct_sec": 0.131,
-                "calibration_cpu_sec": 0.24,
-            },
-            # ~all cost is the shared all-corpus kNN substrate
-            # (_knn_top5_frame) that sim_knn_label_purity also pays.
-            "sim_knn_hubness_histogram": {
-                "fresh_jvm_median_sec": 1.743,
-                "fresh_jvm_samples": [1.893, 1.743, 1.721],
-                "construct_sec": 0.378,
-                "calibration_cpu_sec": 0.244,
-            },
-            # 3.05 s construct = the df-capped exact-truth checkpoint
-            # (shared shingle machinery); the 3 band configs cost ~1 s
-            # each after the single-pass left-join-aggregate rewrite
-            # (9.30 s -> 6.20 s in-round: the first cut evaluated each
-            # config's band join twice).
-            "dedup_lsh_band_sensitivity": {
-                "fresh_jvm_median_sec": 6.199,
-                "fresh_jvm_samples": [7.16, 6.133, 6.199],
-                "construct_sec": 3.053,
-                "calibration_cpu_sec": 0.254,
-            },
-            # 2.73 s of 2.81 s is the shared support-2 edge build +
-            # per-round frontier checkpoints; 4 landmarks ride one loop.
-            "graph_landmark_distance_profile": {
-                "fresh_jvm_median_sec": 2.813,
-                "fresh_jvm_samples": [2.87, 2.744, 2.813],
-                "construct_sec": 2.733,
-                "calibration_cpu_sec": 0.231,
-            },
-            # 4.46 s of 4.90 s is the same eager pair-graph/CC build the
-            # soft-dedup weights query pays; the ESS rollup is ~0.4 s.
-            "pipeline_soft_dedup_ess_by_source": {
-                "fresh_jvm_median_sec": 4.904,
-                "fresh_jvm_samples": [5.328, 4.904, 4.658],
-                "construct_sec": 4.46,
-                "calibration_cpu_sec": 0.306,
-            },
-            # Like the other two stateful streaming queries: not a
-            # HEADLINE entry (real availableNow job); 7.32 s of 7.42 s
-            # is replay-source construction + streaming-query startup +
-            # the extra no-data micro-batch that fires the timers.
-            "stream_idle_timeout_sessions": {
-                "fresh_jvm_median_sec": 7.419,
-                "fresh_jvm_samples": [7.419, 7.381, 7.512],
-                "construct_sec": 7.316,
-                "calibration_cpu_sec": 0.279,
-            },
-            # Round-9 late-session additions (bench_one n=3, sf0.1,
-            # measured the day each op landed). The PQ number is AFTER
-            # the array-local distance rewrite (was 4.45 s exploded);
-            # the stream-stream joins are AFTER the 8-partition state
-            # pin (inner was 23.9 s at the 200-partition default) — both
-            # decomposed in SCALE.md section 26.
-            "sim_product_quantization_audit": {
-                "fresh_jvm_median_sec": 2.59,
-                "fresh_jvm_samples": [2.664, 2.59, 2.205],
-                "construct_sec": 1.374,
-                "calibration_cpu_sec": 0.25,
-            },
-            "analytics_shapley_attribution": {
-                "fresh_jvm_median_sec": 1.744,
-                "fresh_jvm_samples": [1.974, 1.744, 1.573],
-                "construct_sec": 0.979,
-                "calibration_cpu_sec": 0.306,
-            },
-            "text_kneser_ney_bigram": {
-                "fresh_jvm_median_sec": 1.096,
-                "fresh_jvm_samples": [1.204, 0.969, 1.096],
-                "construct_sec": 0.393,
-                "calibration_cpu_sec": 0.222,
-            },
-            "ml_decision_tree_depth2": {
-                "fresh_jvm_median_sec": 1.534,
-                "fresh_jvm_samples": [1.717, 1.37, 1.534],
-                "construct_sec": 0.985,
-                "calibration_cpu_sec": 0.328,
-            },
-            "ts_granger_causality_daily": {
-                "fresh_jvm_median_sec": 1.277,
-                "fresh_jvm_samples": [1.61, 1.277, 1.133],
-                "construct_sec": 0.697,
-                "calibration_cpu_sec": 0.26,
-            },
-            "graph_louvain_first_sweep": {
-                "fresh_jvm_median_sec": 5.411,
-                "fresh_jvm_samples": [5.591, 5.155, 5.411],
-                "construct_sec": 4.862,  # eager co-purchase edge build
-                "calibration_cpu_sec": 0.316,
-            },
-            "analytics_markov_absorption_time": {
-                "fresh_jvm_median_sec": 2.454,
-                "fresh_jvm_samples": [2.813, 2.454, 2.09],
-                "construct_sec": 1.29,
-                "calibration_cpu_sec": 0.207,
-            },
-            "analytics_mann_whitney_u": {
-                "fresh_jvm_median_sec": 1.455,
-                "fresh_jvm_samples": [1.377, 1.455, 1.484],
-                "construct_sec": 0.986,
-                "calibration_cpu_sec": 0.276,
-            },
-            "agg_bloom_filter_fpr_audit": {
-                "fresh_jvm_median_sec": 1.489,
-                "fresh_jvm_samples": [1.755, 1.427, 1.489],
-                "construct_sec": 0.896,
-                "calibration_cpu_sec": 0.259,
-            },
-            "text_burrows_delta_sources": {
-                "fresh_jvm_median_sec": 1.276,
-                "fresh_jvm_samples": [1.471, 1.276, 1.184],
-                "construct_sec": 0.654,
-                "calibration_cpu_sec": 0.208,
-            },
-            # streaming replays (n=1 — replay cost is startup-dominated
-            # and stable; same regime note as stream_idle_timeout)
-            "stream_click_purchase_interval_join": {
-                "fresh_jvm_median_sec": 6.962,
-                "construct_sec": 6.759,
-                "calibration_cpu_sec": 0.25,
-            },
-            "stream_left_outer_join_watermark_close": {
-                "fresh_jvm_median_sec": 7.667,
-                "construct_sec": 7.17,
-                "calibration_cpu_sec": 0.337,
-            },
-            "stream_full_outer_join_watermark_close": {
-                "fresh_jvm_median_sec": 8.13,
-                "construct_sec": 7.458,
-                "calibration_cpu_sec": 0.26,
-            },
-            # Round-10 driver-scale rehearsal of the four heaviest staged
-            # streaming entrants (VERDICT r9 "Next round" #5): fresh JVM,
-            # n=3, at sf0.01 — the scale the CORRECTNESS driver actually
-            # runs. All four are startup/micro-batch-harness dominated
-            # (construct ~= median) and finish in 2.5-6.3 s, comfortable
-            # headroom under any per-query driver budget; the same four
-            # also passed the full 50-slot rehearse_driver.py pass this
-            # round (50/50 green).
-            "stream_click_purchase_interval_join_sf0_01": {
-                "fresh_jvm_median_sec": 6.15,
-                "fresh_jvm_samples": [6.484, 6.15, 5.832],
-                "construct_sec": 6.013,
-                "calibration_cpu_sec": 0.245,
-            },
-            "stream_left_outer_join_watermark_close_sf0_01": {
-                "fresh_jvm_median_sec": 6.285,
-                "fresh_jvm_samples": [6.329, 6.152, 6.285],
-                "construct_sec": 5.976,
-                "calibration_cpu_sec": 0.228,
-            },
-            "stream_full_outer_join_watermark_close_sf0_01": {
-                "fresh_jvm_median_sec": 6.095,
-                "fresh_jvm_samples": [6.702, 6.095, 5.835],
-                "construct_sec": 5.708,
-                "calibration_cpu_sec": 0.237,
-            },
-            "stream_replay_dedup_exactly_once_sf0_01": {
-                "fresh_jvm_median_sec": 2.466,
-                "fresh_jvm_samples": [2.55, 2.466, 2.336],
-                "construct_sec": 1.946,
-                "calibration_cpu_sec": 0.269,
-            },
-            # Round-10 tripwire triage on a high-variance host (probe
-            # cpu spread 29-38% across two same-session bench runs; the
-            # two runs flagged DIFFERENT queries, the noise signature):
-            # both flags clear in fresh-JVM isolation at n=5 —
-            # asof_join_events_orders 1.218 s at probe 0.309 (~0.82
-            # r3-host-seconds, in line with its 0.72-0.80 history; no
-            # commit touched operators/asof.py since its r1 pin) and
-            # multimodal_decode_meta 0.429 s at probe 0.271 (~0.33
-            # normalized == its r9 0.325 exactly). No plan regression.
-            "asof_join_events_orders_r10": {
-                "fresh_jvm_median_sec": 1.218,
-                "fresh_jvm_samples": [1.545, 1.889, 1.218, 1.128, 0.884],
-                "construct_sec": 0.719,
-                "calibration_cpu_sec": 0.309,
-            },
-            "multimodal_decode_meta_r10": {
-                "fresh_jvm_median_sec": 0.429,
-                "fresh_jvm_samples": [0.56, 0.446, 0.409, 0.398, 0.429],
-                "construct_sec": 0.175,
-                "calibration_cpu_sec": 0.271,
-            },
-            # Round-11 resolution of the ONE unresolved r10 tripwire flag
-            # (VERDICT r10 "What's wrong" #1): stream_window_tumbling
-            # flagged 1.64x (0.344 -> 0.563 raw) on the noisiest host of
-            # the build (35.8% probe spread). Fresh-JVM n=5 isolation:
-            # median 0.381 s at probe 0.222 ~= 0.357 r3-host-normalized
-            # seconds — within 4% of its r9 baseline 0.344. git log
-            # confirms zero commits touched its plan (plans/
-            # streaming_batch.py unchanged f0077fe..HEAD for this
-            # function). Verdict: host noise, no regression, flag closed.
-            "stream_window_tumbling_r11": {
-                "fresh_jvm_median_sec": 0.381,
-                "fresh_jvm_samples": [0.533, 0.448, 0.381, 0.349, 0.348],
-                "construct_sec": 0.142,
-                "calibration_cpu_sec": 0.222,
-            },
-            # Round-11 triage of the round-11 builder run's one flag
-            # (multimodal_decode_meta 2.25x raw): fresh-JVM n=5 median
-            # 0.529 s at probe 0.338 — a probe this slow means the host
-            # was mid-burst — normalizing to the r3 anchor gives 0.326,
-            # exactly the query's r9/r10 normalized baseline
-            # (0.325/0.33). Same verdict as its r10 flag: host noise.
-            # The probe itself swung 0.214 -> 0.338 between runs minutes
-            # apart this session; see the host-variance note in SCALE.md
-            # §29 for the three-round spread history.
-            "multimodal_decode_meta_r11": {
-                "fresh_jvm_median_sec": 0.529,
-                "fresh_jvm_samples": [0.632, 0.752, 0.529, 0.471, 0.424],
-                "construct_sec": 0.207,
-                "calibration_cpu_sec": 0.338,
-            },
-        },
     }
-    # Committed sf1 core-scaling probe (SCALE.md §32, VERDICT r12 #6):
-    # measured once per optimization round with tools/scale_probe.py on the
-    # 10x disjoint-replica set — NOT a per-run measurement (the driver's
-    # testdata tops out at sf0.1), merged here so the detail record carries
-    # the round's scaling evidence next to the in-suite medians.
-    probe_path = os.path.join(here_dir, "plans", "r13", "scale_probe_sf1.json")
-    try:
-        with open(probe_path) as fh:
-            detail_sf1_probe = json.load(fh)
-    except (OSError, json.JSONDecodeError):
-        detail_sf1_probe = None
-
-    if fresh_basis:
-        fresh_block = {
-            "method": "tools/bench_one.py subprocess per query (fresh JVM, "
-                      "n=3, construction+execution, own calibration probe); "
-                      f"the {freshjvm_n} slowest in-suite queries this run. "
-                      "SECONDARY basis — the in-suite medians above remain "
-                      "the methodology-continuous cross-round series.",
-            "queries": fresh_basis,
-        }
-        detail["fresh_jvm_basis"] = fresh_block
-        fresh_path = os.path.join(here_dir, f"BENCH_FRESHJVM_r{rnd:02d}.json")
-        with open(fresh_path, "w") as fh:
-            json.dump(fresh_block, fh, indent=1)
-        print(f"fresh-jvm basis -> {fresh_path}", file=sys.stderr)
-
-    if detail_sf1_probe:
-        detail["sf1_scaling_probe"] = detail_sf1_probe
 
     detail_path = os.path.join(here_dir, f"BENCH_DETAIL_r{rnd:02d}.json")
     with open(detail_path, "w") as fh:

@@ -17,8 +17,9 @@ SF_ORACLE = os.environ.get("WCS_TEST_SF_DIR", "/root/testdata/sf0.01")
 #: stale-certification / plan fingerprints / bench tripwire / scale-plan
 #: guards), the operator unit oracles, and DuckDB parity for every
 #: DRIVER_WINDOW query (a superset of everything touched this round).
-#: The long soaks — full 540-query parity, fuzz/property/chaos/streaming
-#: replays, the per-round pandas-oracle files — run with
+#: The CDC property soak (`test_cdc_property`, 12 seeded examples against
+#: a dict oracle) runs here too. The long soaks — full 540-query parity,
+#: fuzz/chaos/streaming replays, the per-round pandas-oracle files — run with
 #: `WCS_SLOW_TESTS=1 python -m pytest tests/ -q` (executed green in full
 #: before each round's final commit; see OPTIMIZATION_r13.md).
 #:
@@ -26,7 +27,6 @@ SF_ORACLE = os.environ.get("WCS_TEST_SF_DIR", "/root/testdata/sf0.01")
 #: test file is never silently skipped.
 SLOW_MODULES: frozenset[str] = frozenset(
     {
-        "test_cdc_property",      # hypothesis-style CDC soak (~14 s+)
         "test_chaos_kill",        # subprocess kill/takeover soaks (~13 min)
         "test_fuzz_relational",   # randomized relational differential fuzz
         "test_fuzz_sql_text",     # SQL-front text fuzz (~7 min)

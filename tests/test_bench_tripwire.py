@@ -12,7 +12,10 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -207,6 +210,39 @@ def test_isolation_failure_leaves_flag_standing():
     )
     assert "multimodal_decode_meta" in tw["flagged"]
     assert iso == {} and tw["isolation_runs"] == 0
+
+
+_STDERR = "\n".join(f"jvm line {i}" for i in range(30))
+
+
+def _exit_1(*a, **kw):
+    return subprocess.CompletedProcess(a[0], 1, stdout="", stderr=_STDERR)
+
+
+def _timeout(*a, **kw):
+    raise subprocess.TimeoutExpired(a[0], kw["timeout"], stderr=_STDERR.encode())
+
+
+def _garbled(*a, **kw):
+    return subprocess.CompletedProcess(a[0], 0, stdout="{not json\n", stderr=_STDERR)
+
+
+@pytest.mark.parametrize("run, why", [
+    (_exit_1, "return code 1"),
+    (_timeout, "TimeoutExpired"),
+    (_garbled, "no parseable JSON line"),
+])
+def test_failed_isolation_run_says_why(monkeypatch, capsys, run, why):
+    """A failed bench_one subprocess returns None (the bench never
+    crashes) and writes its cause and the last 20 stderr lines."""
+    import bench
+
+    monkeypatch.setattr(subprocess, "run", run)
+    assert bench.isolate_one("q1_pricing_summary", "sf") is None
+    err = capsys.readouterr().err
+    assert why in err
+    assert "jvm line 29" in err and "jvm line 10" in err
+    assert "jvm line 9\n" not in err
 
 
 def test_isolation_run_cap():

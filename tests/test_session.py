@@ -1,0 +1,13 @@
+"""Session defaults that must fit the host they start on."""
+
+from __future__ import annotations
+
+from wal_consumer_spark.session import driver_memory
+
+GiB = 2**30
+
+
+def test_driver_memory_is_sized_from_host_ram():
+    assert driver_memory(15 * GiB) == "9g"  # 60% of 15 GiB, whole GiB
+    assert driver_memory(64 * GiB) == "16g"  # capped
+    assert driver_memory(1 * GiB) == "1g"  # floored

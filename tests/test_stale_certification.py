@@ -248,29 +248,3 @@ def test_registry_module_excluded_from_closures():
     assert not any(
         mod == "wal_consumer_spark.plans.registry" for mod, _ in members
     )
-
-
-def test_certification_ledger_matches_live_audit():
-    """CERTIFICATION_LEDGER.json (VERDICT r11 stretch #8) must equal the
-    audit's live output: name -> certified round/commit + a digest of the
-    dependency closure AS OF that commit. Regenerate with
-    `python tools/stale_audit.py --ledger` whenever this fails — a
-    mismatch means certifications moved (new round certified, closure
-    membership changed) without the committed manifest following."""
-    import json
-
-    path = REPO / "CERTIFICATION_LEDGER.json"
-    assert path.exists(), "run `python tools/stale_audit.py --ledger`"
-    on_disk = json.loads(path.read_text())
-    live = stale_audit.ledger()
-    assert on_disk == live, (
-        "committed ledger diverges from the live audit; regenerate with "
-        "`python tools/stale_audit.py --ledger`. First diffs: "
-        + str(
-            [
-                (k, on_disk.get(k), live.get(k))
-                for k in sorted(set(on_disk) ^ set(live)
-                                | {k for k in on_disk if on_disk.get(k) != live.get(k)})
-            ][:3]
-        )
-    )

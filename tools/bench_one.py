@@ -11,26 +11,25 @@ change). A number measured here, in a JVM that has run NOTHING else, is
 the query's true plan cost; the delta vs the in-suite median is the
 suite's session overhead.
 
+The measurement steps are bench.py's own: `warmup`, the `calibrate`
+probe, one untimed run, then n runs of `time_query`, each followed by
+`release_persisted`. `bench.isolate_one` runs this script as a
+subprocess; `tools/scale_probe.py` does too, through `isolate_one`.
+
 Usage: python tools/bench_one.py QUERY [n] [sf_dir]
-Prints one JSON line: {"query", "sf", "n", "samples", "median",
-"construct_sec", "calibration": {"cpu_sec", "scan_sec"}}.
+Prints one JSON line: {"query", "sf_dir", "n", "samples", "median",
+"construct_sec", "calibration": {"cpu_sec", "scan_sec", ...}}.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
-import time
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
-
-
-def median(xs: list[float]) -> float:
-    s = sorted(xs)
-    mid = len(s) // 2
-    return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
 
 
 def main() -> int:
@@ -40,67 +39,35 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
 
-    from bench import warmup
+    from bench import calibrate, release_persisted, time_query, warmup
     from wal_consumer_spark.plans import all_specs
     from wal_consumer_spark.session import get_spark
 
+    spec = all_specs()[name]
     spark = get_spark(app_name=f"wcs-bench-one-{name}")
     spark.sparkContext.setLogLevel("ERROR")
-    spec = all_specs()[name]
     warmup(spark, sf_dir)
-
-    from pyspark.sql import functions as F
-
-    def med3(fn) -> float:
-        ts = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        return round(sorted(ts)[1], 3)
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    calibration = {
-        "cpu_sec": med3(
-            lambda: spark.range(200_000_000)
-            .selectExpr("sum(xxhash64(id) % 1000)")
-            .write.format("noop").mode("overwrite").save()
-        ),
-        "scan_sec": med3(
-            lambda: li.agg(
-                F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
-            ).write.format("noop").mode("overwrite").save()
-        ),
-    }
-
-    def release() -> None:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jmap.get(rid).unpersist(True)
-        spark.catalog.clearCache()
+    calibration = calibrate(spark, sf_dir)
 
     # one untimed warmup run (per-query Catalyst analysis + codegen compile)
-    spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    release()
+    time_query(spark, spec, sf_dir)
+    release_persisted(spark)
 
     samples, construct = [], []
     for _ in range(n):
         spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        df = spec.spark(spark, sf_dir)
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-        construct.append(t1 - t0)
-        release()
+        total, built = time_query(spark, spec, sf_dir)
+        samples.append(total)
+        construct.append(built)
+        release_persisted(spark)
 
     print(json.dumps({
         "query": name,
         "sf_dir": sf_dir,
         "n": n,
         "samples": [round(x, 3) for x in samples],
-        "median": round(median(samples), 3),
-        "construct_sec": round(median(construct), 3),
+        "median": round(statistics.median(samples), 3),
+        "construct_sec": round(statistics.median(construct), 3),
         "calibration": calibration,
     }))
     spark.stop()

@@ -1,16 +1,18 @@
 #!/usr/bin/env python
-"""Per-query shuffle-volume measurement via the Spark UI REST API —
-the SCALE.md §29 harness, committed as a tool (round 11 ran this
-ad-hoc; round 12 uses it to test the §29 scaling laws at a second
-scale factor, VERDICT r11 "Next round" #2).
+"""Per-query shuffle-volume measurement from Spark's status store — the
+SCALE.md §29 harness, committed as a tool (round 11 ran this ad-hoc;
+round 12 uses it to test the §29 scaling laws at a second scale factor,
+VERDICT r11 "Next round" #2).
 
-For each named query: snapshot the completed-stage set, run the query
-to a noop sink, then attribute every NEW completed stage's metrics
-(input bytes/records, shuffle read/write bytes, shuffle write records)
-to that query. Caveat shared with r11: a localCheckpoint forced by the
-first query that touches a shared substrate is attributed to THAT
-query — run the same query list in the same order when comparing scale
-factors so the attribution bias cancels.
+Each named query runs to a noop sink (bench.time_query) under its own
+job group. The tool then sums the metrics (input bytes/records, shuffle
+read/write bytes, shuffle write records) of every stage that group's
+jobs ran, read off the status store with the UI disabled, the same way
+perfbench/trace.py reads its per-query stage totals. A skipped stage
+reads 0. Caveat shared with r11: a localCheckpoint forced by the first
+query that touches a shared substrate is attributed to THAT query — run
+the same query list in the same order when comparing scale factors so
+the attribution bias cancels.
 
 The falsifiable §29 check: for a plan whose claimed law is linear,
 `shuffle_write_records / input_records` is CONSTANT across scale
@@ -26,8 +28,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
@@ -42,62 +42,36 @@ SECTION29_PLANS = [
 ]
 
 
-def _stages(ui: str, app: str) -> list[dict]:
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url) as resp:
-        return json.load(resp)
-
-
 def measure(sf_dir: str, names: list[str]) -> dict[str, dict]:
+    from bench import release_persisted, time_query
+    from perfbench.trace import group_jobs, job_info
     from wal_consumer_spark.plans import all_specs
     from wal_consumer_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="wcs-shuffle-measure",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark(app_name="wcs-shuffle-measure")
     spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
     specs = all_specs()
 
-    def release() -> None:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jmap.get(rid).unpersist(True)
-        spark.catalog.clearCache()
-
     out: dict[str, dict] = {}
-    seen: set[tuple[int, int]] = set()
     for name in names:
-        t0 = time.perf_counter()
-        specs[name].spark(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        wall = time.perf_counter() - t0
-        # let the status store drain queued stage-completion events
-        time.sleep(1.0)
-        stages = _stages(ui, app)
-        fresh = [
-            s for s in stages
-            if (s["stageId"], s["attemptId"]) not in seen
-        ]
-        seen.update((s["stageId"], s["attemptId"]) for s in stages)
+        sc.setJobGroup(name, name)
+        wall, _ = time_query(spark, specs[name], sf_dir)
+        # the status store is fed by the listener bus: drain it so the
+        # group's last job and stages are recorded before they are read
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        stage_ids = {s for j in job_info(sc, group_jobs(sc, name)) for s in j["stages"]}
+        stages = [store.lastStageAttempt(sid) for sid in sorted(stage_ids)]
         rec = {
             "sf_dir": sf_dir,
             "wall_sec": round(wall, 2),
-            "n_stages": len(fresh),
-            "input_mb": round(sum(s.get("inputBytes", 0) for s in fresh) / 1e6, 2),
-            "input_records": sum(s.get("inputRecords", 0) for s in fresh),
-            "shuffle_write_mb": round(
-                sum(s.get("shuffleWriteBytes", 0) for s in fresh) / 1e6, 2
-            ),
-            "shuffle_read_mb": round(
-                sum(s.get("shuffleReadBytes", 0) for s in fresh) / 1e6, 2
-            ),
-            "shuffle_write_records": sum(
-                s.get("shuffleWriteRecords", 0) for s in fresh
-            ),
+            "n_stages": sum(str(s.status()) == "COMPLETE" for s in stages),
+            "input_mb": round(sum(s.inputBytes() for s in stages) / 1e6, 2),
+            "input_records": sum(s.inputRecords() for s in stages),
+            "shuffle_write_mb": round(sum(s.shuffleWriteBytes() for s in stages) / 1e6, 2),
+            "shuffle_read_mb": round(sum(s.shuffleReadBytes() for s in stages) / 1e6, 2),
+            "shuffle_write_records": sum(s.shuffleWriteRecords() for s in stages),
         }
         rec["rows_ratio"] = (
             round(rec["shuffle_write_records"] / rec["input_records"], 4)
@@ -106,7 +80,7 @@ def measure(sf_dir: str, names: list[str]) -> dict[str, dict]:
         )
         out[name] = rec
         print(json.dumps({"query": name, **rec}))
-        release()
+        release_persisted(spark)
     spark.stop()
     return out
 

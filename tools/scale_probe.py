@@ -11,6 +11,10 @@ measures the same plans where the data outgrows the overhead floor.
 Ratios >> 1 mean the plan actually uses the extra cores; ratios ~= 1 at
 sf1 would mean a serialization bottleneck worth hunting.
 
+Each run is `bench.isolate_one` (tools/bench_one.py in a subprocess)
+with SPARK_GRAFT_CPUS set to the core count; a failed run writes its
+return code and stderr tail to stderr and its row reads "run failed".
+
 Usage: python tools/scale_probe.py [SF_DIR] [HI] [LO] [N_PER_QUERY] [NAME...]
 Writes one JSON line per query and a summary JSON to stdout; full record
 appended nowhere (caller commits the output, e.g. into SCALE.md / the
@@ -21,10 +25,12 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+
+from bench import isolate_one  # noqa: E402
 
 DEFAULT_TARGETS = [
     "dedup_lsh_band_sensitivity",
@@ -40,23 +46,6 @@ DEFAULT_TARGETS = [
 ]
 
 
-def run_one(name: str, sf_dir: str, cpus: int, n: int) -> dict | None:
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.join(_ROOT, "tools", "bench_one.py"),
-             name, str(n), sf_dir],
-            capture_output=True, text=True, timeout=3600, env=env,
-        )
-        for line in reversed(proc.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
-    except Exception:
-        pass
-    return None
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
     hi = int(sys.argv[2]) if len(sys.argv) > 2 else 32
@@ -65,9 +54,11 @@ def main() -> int:
     names = sys.argv[5:] or DEFAULT_TARGETS
     out: dict[str, dict] = {}
     for name in names:
-        rec_hi = run_one(name, sf_dir, hi, n)
-        rec_lo = run_one(name, sf_dir, lo, n)
-        if not rec_hi or not rec_lo:
+        rec_hi, rec_lo = (
+            isolate_one(name, sf_dir, n, env=dict(os.environ, SPARK_GRAFT_CPUS=str(cpus)))
+            for cpus in (hi, lo)
+        )
+        if not (rec_hi and rec_lo and rec_hi.get("median")):
             out[name] = {"error": "run failed", "hi": rec_hi, "lo": rec_lo}
             print(json.dumps({name: out[name]}), flush=True)
             continue

@@ -29,7 +29,8 @@ code. The audit is consumed two ways:
 - ``tests/test_stale_certification.py`` asserts every stale name is
   re-pinned in the current DRIVER_WINDOW or explicitly waived by name;
 - ``python tools/stale_audit.py`` prints the stale set plus the
-  oldest-certification-first fill ordering used to rotate the window.
+  oldest-certification-first fill ordering used to rotate the window;
+  ``--ledger`` prints the per-query certification ledger (JSON) instead.
 
 Uses only git + ast — no Spark session — so it runs in milliseconds
 per (commit, file) pair and caches parses.
@@ -367,9 +368,7 @@ def main() -> int:
     from wal_consumer_spark.plans import all_specs
 
     if "--ledger" in sys.argv:
-        path = REPO / "CERTIFICATION_LEDGER.json"
-        path.write_text(json.dumps(ledger(), indent=1, sort_keys=True) + "\n")
-        print(f"wrote {path}")
+        print(json.dumps(ledger(), indent=1, sort_keys=True))
         return 0
 
     flagged = audit()

@@ -42,6 +42,13 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     _shipped_for.add(key)
 
 
+def driver_memory(phys_bytes: int) -> str:
+    """Default `spark.driver.memory`: 60% of physical RAM in whole GiB,
+    at least 1g and at most 16g, so a local driver heap leaves the host
+    room for Python workers and the page cache (a 15 GiB host gets 9g)."""
+    return f"{min(16, max(1, int(phys_bytes * 0.6) // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "wal-consumer-spark",
     master: str | None = None,
@@ -72,7 +79,11 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
