@@ -132,6 +132,6 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from wal_consumer_spark.session import get_spark
 
-    s = get_spark(app_name="wcs-tests", master="local[8]")
+    s = get_spark(app_name="wcs-tests")
     yield s
     s.stop()

@@ -519,12 +519,13 @@ def test_takeover_soak_lock_handoff_prefix_exact(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # Incremental-rollup kill soak (VERDICT r11 "Next round" #5): the soaks above
 # certify the bucketed KV target; ParquetRollupTarget's replay/restart story
-# (persisted batch ids in version dir names, _SUCCESS-gated discovery,
-# newest-READABLE-version recovery) was tested only under clean restarts.
+# (the batch id committed in the manifest beside each version, and gc() of
+# the superseded version) was tested only under clean restarts.
 # Same harness: a child process merges batches 0..N-1 through the PRODUCTION
 # merge_batch_into (which must skip already-applied ids on every restart),
 # the parent SIGKILLs the process group at random points — landing anywhere
-# in read/merge/parquet-write — and verifies version-prefix recovery.
+# in read/merge/parquet-write/manifest commit/gc — and verifies
+# version-prefix recovery.
 
 N_ROLLUP_BATCHES = 40
 ROLLUP_BATCH_SIZE = 5
@@ -687,12 +688,12 @@ def test_sigkill_rollup_version_prefix_soak(spark, tmp_path):
 
         # ---- recovery invariants ----
         # 1. recovered state is EXACTLY some whole-batch prefix, and the
-        #    prefix length is what the version name claims — a torn merge
-        #    (partial parquet without _SUCCESS) must be invisible
+        #    prefix length is what the manifest claims — a torn merge
+        #    (a version dir the manifest never committed) must be invisible
         k_new, state = _recovered_rollup(spark, tgt)
         assert state == prefixes[k_new], (
-            f"recovered rollup is not the whole-batch prefix its version "
-            f"name claims after kill {kills}: k={k_new}"
+            f"recovered rollup is not the whole-batch prefix its manifest "
+            f"claims after kill {kills}: k={k_new}"
         )
         # 2. durability: committed versions never regress
         assert k_new >= k, f"rollup version regressed {k} -> {k_new}"

@@ -5,8 +5,9 @@ state against a dict oracle, pins the Spark jobs and tasks each micro-batch
 costs, pins the target's flat, bucket-sorted version layout, and checks
 replay, callback, retry and warning behaviour, the window merge on a
 hand-built batch, counts taken once across a failed write, trigger
-durations, dead-version collection, superseded rows, corrupt manifests,
-the backlog gauge, type routing across restarts and single-consumer
+durations, dead-version collection, superseded rows, corrupt manifests
+(of the rollup and the LSH index too), a corrupt applied-id mark, the
+backlog gauge, type routing across restarts and single-consumer
 exclusion."""
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ from wal_consumer_spark.streaming import (
     WalStreamConsumer,
 )
 from wal_consumer_spark.streaming.consumer import TARGET_SCHEMA
+from wal_consumer_spark.streaming.dedup_index import StreamingMinHashIndex
+from wal_consumer_spark.streaming.incremental import ParquetRollupTarget
 from wal_consumer_spark.streaming.routing import TypeRoutedTarget
 
 N_BUCKETS = 64
@@ -43,9 +46,9 @@ WAL_SCHEMA = "id LONG, entity_id LONG, operation STRING, entity_bytes BINARY, en
 #: The target slice spans a few flat version dirs, below the 32 paths that
 #: start Spark's parallel listing job.
 JOBS_PER_BATCH = 5
-#: the tasks those jobs run under local[8] are 12 a batch; caching a
-#: shuffled frame pins every later job at spark.sql.shuffle.partitions
-#: tasks and multiplies this
+#: the tasks those jobs run are 14 a batch (5 + 4 + 2 + 2 + 1), measured
+#: alike under local[4] and local[8]; caching a shuffled frame pins every
+#: later job at spark.sql.shuffle.partitions tasks and multiplies this
 MAX_TASKS_PER_BATCH = 16
 #: parquet files in one version dir of this scenario (1 measured): the
 #: rebalanced write coalesces the whole slice into one output partition
@@ -499,20 +502,41 @@ def test_read_for_pushes_the_bucket_filter_to_parquet(applied):
 
 @pytest.mark.parametrize("garbage", ["{not json", "[1, 2]", '{"0": "v1"}', '{"0": null}'])
 def test_corrupt_manifest_fails_loudly(spark, tmp_path, garbage):
-    """An unreadable manifest raises and names its path; it never reads
-    as an empty target whose next commit drops the untouched buckets."""
+    """For the keyed target, the rollup and the LSH index alike, an
+    unreadable manifest raises on read and write and names its path; it
+    never reads as empty state whose next commit drops what the write did
+    not touch."""
     target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=N_BUCKETS)
-    os.makedirs(target.path)
-    with open(target._manifest_path(), "w", encoding="utf-8") as f:
-        f.write(garbage)
+    rollup = ParquetRollupTarget(spark, str(tmp_path / "rollup"))
+    index = StreamingMinHashIndex(spark, str(tmp_path / "index"))
     batch = _batch(spark, [(1, 1, "ADD", b"a")])
     new_state = batch.select("entity_id", "entity_bytes", "entity_type")
-    with pytest.raises(ValueError, match=re.escape(target._manifest_path())):
-        target.read()
-    with pytest.raises(ValueError, match=re.escape(target._manifest_path())):
-        target.write_for(new_state, batch, [0])
-    with open(target._manifest_path(), encoding="utf-8") as f:
-        assert f.read() == garbage
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id LONG, text STRING")
+    for state, read, write in [
+        (target, target.read, lambda: target.write_for(new_state, batch, [0])),
+        (rollup, rollup.read, lambda: rollup.write(new_state, 0)),
+        (index, index.index_size, lambda: index.process_batch(docs, 0)),
+    ]:
+        os.makedirs(state.path)
+        with open(state._manifest_path(), "w", encoding="utf-8") as f:
+            f.write(garbage)
+        for op in (read, write):
+            with pytest.raises(ValueError, match=re.escape(state._manifest_path())):
+                op()
+        with open(state._manifest_path(), encoding="utf-8") as f:
+            assert f.read() == garbage
+
+
+def test_corrupt_applied_id_mark_fails_loudly(spark, tmp_path):
+    """A damaged applied-id mark raises and names its path; read as "never
+    applied", it would make the backlog gauge count the whole WAL."""
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "_wcs_applied_id").write_text("12x")
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"))
+    consumer = WalStreamConsumer(spark, str(tmp_path / "wal"), str(ckpt), target)
+    with pytest.raises(ValueError, match=re.escape(f"{ckpt}/_wcs_applied_id")):
+        consumer.backlog(max_age=0)
 
 
 def test_backlog_is_zero_only_while_the_wal_dir_is_missing(spark, tmp_path):

@@ -211,17 +211,20 @@ def test_soak_20_batches_crash_resume_equals_batch_at_every_commit(spark, tmp_pa
 
 
 def test_partial_bucket_write_is_retried_not_skipped(spark, tmp_path):
-    """Crash window: Spark creates the bucket dir before the write job
-    completes, so the replay guard must key on the _SUCCESS marker — a
-    bare (partial) dir has to be rewritten, or the batch's band-bucket
-    rows stay incomplete forever and its near-dup pairs are never found."""
+    """Crash window: a version dir lands before the manifest commits it, so
+    a batch counts as indexed only once the manifest names it. A partial
+    ``v<n>/`` from a crashed attempt has to be rewritten, or the batch's
+    band-bucket rows stay incomplete forever and its near-dup pairs are
+    never found."""
     import os
 
     idx = StreamingMinHashIndex(spark, str(tmp_path / "idx"), threshold=0.5)
     idx.process_batch(_df(spark, _BATCHES[0]), 0).collect()
+    assert idx._manifest() == {"0": 1}
 
-    # simulate a crash mid-write of batch 1's buckets: dir without _SUCCESS
-    partial = f"{idx.path}/buckets/b1"
+    # simulate a crash mid-write of batch 1's buckets: its signatures and a
+    # torn bucket file landed in v2, but the manifest never committed it
+    partial = f"{idx.path}/v2/buckets"
     os.makedirs(partial)
     with open(f"{partial}/part-garbage.parquet", "wb") as f:
         f.write(b"not parquet")
@@ -231,4 +234,5 @@ def test_partial_bucket_write_is_retried_not_skipped(spark, tmp_path):
         for r in idx.process_batch(_df(spark, _BATCHES[1]), 1).collect()
     }
     assert (1, 7) in got and (5, 6) in got  # batch 1's pairs fully detected
-    assert os.path.exists(f"{partial}/_SUCCESS")  # rewrite actually committed
+    assert idx._manifest() == {"0": 1, "1": 2}  # rewrite actually committed
+    assert not os.path.exists(f"{partial}/part-garbage.parquet")

@@ -3,6 +3,8 @@ correctness for the alternating large-star/small-star iteration."""
 
 from __future__ import annotations
 
+import pytest
+
 from wal_consumer_spark.operators.graph import connected_components, dedup_clusters
 
 
@@ -43,10 +45,12 @@ def test_cc_round_telemetry_and_convergence(spark):
     # never merge two true components
     two = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)]
     df2 = spark.createDataFrame(two, "doc1 LONG, doc2 LONG")
-    part = dict(
-        (r.node, r.component)
-        for r in connected_components(df2, max_iter=1).collect()
-    )
+    with pytest.warns(RuntimeWarning, match=r"rounds=1 reached max_iter=1"):
+        part = dict(
+            (r.node, r.component)
+            for r in connected_components(df2, max_iter=1).collect()
+        )
+    assert last_cc_stats == {"rounds": 1, "converged": False}
     for node, comp in part.items():
         same_true = (node <= 4) == (comp <= 4)
         assert same_true, f"over-merge: {node} -> {comp}"

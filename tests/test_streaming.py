@@ -470,10 +470,10 @@ def test_bucketed_target_replay_after_crash_no_duplicates(spark, tmp_path):
 
 
 def test_rollup_target_ignores_partial_version_dir(spark, tmp_path):
-    """Crash window: a version dir without Spark's _SUCCESS marker must not
-    count as committed — otherwise last_batch_id claims the batch was
-    applied (the replay is then skipped and its data lost) and read()
-    abandons all accumulated state."""
+    """Crash window: a version dir the manifest does not reference is not
+    committed, however complete it looks — otherwise last_batch_id claims
+    the batch was applied (the replay is then skipped and its data lost)
+    and read() abandons all accumulated state."""
     import os
 
     from wal_consumer_spark.streaming.incremental import (
@@ -488,13 +488,16 @@ def test_rollup_target_ignores_partial_version_dir(spark, tmp_path):
     merge_batch_into(rollup, target, b0, 0)
     assert target.last_batch_id == 0
 
-    # simulate a crash mid-write of batch 1: dir exists, no _SUCCESS
-    partial = f"{target.path}/v2_b1"
+    # simulate a crash mid-write of batch 1: the next version dir holds
+    # files (even Spark's _SUCCESS marker), but the manifest never committed
+    partial = f"{target.path}/v2"
     os.makedirs(partial)
     with open(f"{partial}/part-garbage.parquet", "wb") as f:
         f.write(b"not parquet")
+    open(f"{partial}/_SUCCESS", "wb").close()
 
     assert target.last_batch_id == 0  # partial dir is NOT committed
+    assert target.read().count() == 1  # batch 0's state is still served
     b1 = spark.createDataFrame([("a", 4.0), ("b", 8.0)], "k STRING, v DOUBLE")
     merge_batch_into(rollup, target, b1, 1)  # replay must actually merge
     final = {r["k"]: (r["n"], r["total"]) for r in rollup.finish(target.read()).collect()}
@@ -543,14 +546,14 @@ def test_bucketed_target_gc_removes_only_unreferenced_versions(spark, tmp_path):
     assert on_disk == live
 
 
-def test_rollup_damaged_newest_version_falls_back_and_remerges(spark, tmp_path):
-    """read() and last_batch_id must agree on the newest READABLE version:
-    if the newest committed dir is damaged out-of-band, the state falls
-    back one version AND the damaged version's batch id stops claiming
-    'already applied' — so the replay actually re-merges it instead of
-    silently losing its deltas."""
-    import os
+def test_rollup_committed_version_that_is_gone_raises(spark, tmp_path):
+    """A committed version removed out of band raises instead of serving an
+    older state: the checkpoint may already have committed its batch, so a
+    fallback would drop that batch's deltas without an error (and gc() has
+    removed the older versions anyway)."""
     import shutil
+
+    from pyspark.errors import AnalysisException
 
     from wal_consumer_spark.streaming.incremental import (
         IncrementalRollup,
@@ -562,20 +565,17 @@ def test_rollup_damaged_newest_version_falls_back_and_remerges(spark, tmp_path):
     target = ParquetRollupTarget(spark, str(tmp_path / "roll"))
     merge_batch_into(rollup, target, spark.createDataFrame([("a", 1.0)], "k STRING, v DOUBLE"), 0)
     merge_batch_into(rollup, target, spark.createDataFrame([("a", 2.0)], "k STRING, v DOUBLE"), 1)
-    assert target.last_batch_id == 1
+    assert target._manifest() == {"1": 2}
 
-    # damage the newest committed version out-of-band (keep _SUCCESS)
-    vdir = f"{target.path}/v2_b1"
-    for nm in os.listdir(vdir):
-        if nm.endswith(".parquet"):
-            os.remove(os.path.join(vdir, nm))
-    shutil.rmtree(f"{vdir}/.crc", ignore_errors=True)
-
-    assert target.last_batch_id == 0  # agrees with what read() can serve
-    # the checkpoint replays batch 1: it must actually merge again
-    merge_batch_into(rollup, target, spark.createDataFrame([("a", 2.0)], "k STRING, v DOUBLE"), 1)
-    final = {r["k"]: (r["n"], r["total"]) for r in rollup.finish(target.read()).collect()}
-    assert final["a"][0] == 2 and abs(final["a"][1] - 3.0) < 1e-9
+    shutil.rmtree(f"{target.path}/v2")
+    assert target.last_batch_id == 1  # the commit still stands
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        target.read()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        merge_batch_into(
+            rollup, target, spark.createDataFrame([("a", 4.0)], "k STRING, v DOUBLE"), 2
+        )
+    assert target._manifest() == {"1": 2}
 
 
 def test_max_files_per_trigger_drains_in_bounded_batches(spark, tmp_path):

@@ -11,6 +11,8 @@ task's memory (unlike label-propagation-by-collect approaches).
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -102,11 +104,11 @@ def connected_components(
     sf0.1; tests assert convergence via `last_cc_stats`).
 
     NON-CONVERGENCE CONTRACT: if max_iter rounds pass without the edge
-    set stabilizing, the function RETURNS THE PARTIAL CONTRACTION rather
-    than raising — every returned (node, component) pair is a correct
-    "node belongs to the component containing `component`" statement, but
-    two nodes of one true component may still map to different
-    representatives (over-segmentation, never over-merging). Callers that
+    set stabilizing, the function warns (RuntimeWarning) and RETURNS THE
+    PARTIAL CONTRACTION rather than raising — every returned (node,
+    component) pair is a correct "node belongs to the component containing
+    `component`" statement, but two nodes of one true component may still
+    map to different representatives (over-segmentation, never over-merging). Callers that
     need certainty check `last_cc_stats["converged"]` and re-run with a
     higher max_iter; dedup pipelines prefer this failure mode (a missed
     merge = a duplicate survives) over an exception at hour 6 of a 100 TB
@@ -175,6 +177,13 @@ def connected_components(
         prev_sum = nxt_sum
     last_cc_stats.clear()
     last_cc_stats.update({"rounds": rounds, "converged": converged})
+    if not converged:
+        warnings.warn(
+            f"connected_components did not converge: rounds={rounds} reached "
+            f"max_iter={max_iter}; the result is a partial contraction",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     # component id = the (unique, by convergence) dst each node points at;
     # root nodes point at themselves
     membership = edges.select(F.col("src").alias("node"), F.col("dst").alias("component"))

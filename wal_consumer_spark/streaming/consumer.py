@@ -72,6 +72,7 @@ from wal_consumer_spark.operators.cdc import (
 )
 from wal_consumer_spark.sources.wal_source import read_wal_stream
 from wal_consumer_spark.streaming.metrics import ConsumerMetrics, WalQueryListener, WalState
+from wal_consumer_spark.streaming.versions import VersionedState, write_atomic
 
 TARGET_SCHEMA = "entity_id LONG, entity_bytes BINARY, entity_type STRING"
 #: a target version's files: the target columns plus the row's bucket and version
@@ -93,7 +94,7 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-class BucketedParquetKeyValueTarget:
+class BucketedParquetKeyValueTarget(VersionedState):
     """Incremental keyed sink: state is hash-bucketed by entity_id, and a
     micro-batch reads and rewrites ONLY the buckets its keys fall in —
     O(|touched buckets|) per trigger instead of O(|state|), the difference
@@ -104,7 +105,9 @@ class BucketedParquetKeyValueTarget:
     (Delta/Iceberg `MERGE INTO`) — same merge_cdc semantics, but the
     manifest swap becomes the table format's atomic commit.
 
-    Commit protocol on plain parquet (no table format available):
+    Commit protocol on plain parquet (no table format available): the one
+    VersionedState protocol (streaming/versions.py), with the manifest
+    mapping each bucket to the version dir that holds it.
 
     - each write lands every touched bucket in a fresh, flat version dir
       ``v<n>/``, never mutating prior versions. Rows carry two stored
@@ -113,13 +116,9 @@ class BucketedParquetKeyValueTarget:
       on it within each file, so a version holds a few size-bounded files
       (one writer per output partition, not one per bucket) and each file
       holds whole buckets with tight row-group min/max on ``__bucket``;
-    - a manifest (bucket -> version) is swapped in atomically LAST
-      (os.replace), so a crash mid-write leaves the previous manifest — and
-      thus the previous consistent state — intact, mirroring the atomic
-      delete+commit of the reference head handle (WalHeadHandle.java:29-42);
-    - replays re-apply against the old manifest: same input + same state ->
-      same output, so the at-least-once foreachBatch contract stays
-      idempotent (R10/R11).
+    - the manifest is committed LAST, so replays re-apply against the old
+      manifest: same input + same state -> same output, and the
+      at-least-once foreachBatch contract stays idempotent (R10/R11).
 
     A read is one scan over the distinct version dirs its buckets point to,
     filtered on ``__bucket IN (buckets)`` and ``manifest[__bucket] ==
@@ -132,41 +131,8 @@ class BucketedParquetKeyValueTarget:
     each committed batch."""
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.n_buckets = n_buckets
-
-    # -- manifest ----------------------------------------------------------
-
-    def _manifest_path(self) -> str:
-        return f"{self.path}/_MANIFEST.json"
-
-    def _manifest(self) -> dict[str, int]:
-        """The committed bucket -> version map; empty only when no manifest
-        was ever committed. An unreadable manifest raises: read as empty,
-        the next commit would drop every bucket the batch did not touch."""
-        import json
-
-        path = self._manifest_path()
-        try:
-            with open(path, encoding="utf-8") as f:
-                text = f.read()
-        except FileNotFoundError:
-            return {}
-        try:
-            return {k: int(v) for k, v in json.loads(text).items()}
-        except (ValueError, TypeError, AttributeError) as e:
-            raise ValueError(f"unreadable target manifest {path}: {e}") from e
-
-    def _commit_manifest(self, manifest: dict[str, int]) -> None:
-        import json
-        import os
-
-        os.makedirs(self.path, exist_ok=True)
-        tmp = f"{self._manifest_path()}.tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())  # the atomic commit point
 
     # -- bucketing ---------------------------------------------------------
 
@@ -229,7 +195,7 @@ class BucketedParquetKeyValueTarget:
         foreachBatch REPLAY of a crash that landed files but never committed
         recomputes the same version number — append would double every row
         of the first attempt."""
-        version = max(manifest.values(), default=0) + 1
+        version = self._next_version(manifest)
         (
             self._bucket(df)
             .withColumn("__version", F.lit(version))
@@ -239,37 +205,6 @@ class BucketedParquetKeyValueTarget:
             .parquet(f"{self.path}/v{version}")
         )
         return version
-
-    def gc(self) -> list[str]:
-        """Remove version dirs no committed manifest entry references (the
-        compaction sweep the class docstring promises). Safe to run any
-        time AFTER in-flight writes finish: a concurrent writer's new
-        version dir is unreferenced until its manifest commit, so gc must
-        not race an active write_for — the consumer is single-process by
-        the checkpoint lock, making 'between batches' the natural slot,
-        and it runs gc there. A reader still holding an older manifest may
-        find the version dirs it points to gone. Returns the removed dir
-        paths."""
-        import os
-        import re
-        import shutil
-
-        live = {f"v{v}" for v in self._manifest().values()}
-        removed = []
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return removed
-        for nm in names:
-            if re.fullmatch(r"v\d+", nm) and nm not in live:
-                path = f"{self.path}/{nm}"
-                shutil.rmtree(path, ignore_errors=True)
-                # report only what actually left the disk — a failed rmtree
-                # (EPERM, lingering handle) must not read as a clean sweep;
-                # the survivor is retried on the next gc()
-                if not os.path.exists(path):
-                    removed.append(path)
-        return removed
 
     def write(self, df: DataFrame) -> None:
         """Whole-state write (compaction / bootstrap): every bucket is
@@ -399,16 +334,11 @@ class WalStreamConsumer:
         invalidate the backlog cache. A failed persist only costs the
         gauge's accuracy after a restart, so it warns instead of failing the
         batch."""
-        import os
-
         if self._last_applied_id is None or max_id > self._last_applied_id:
             self._last_applied_id = max_id
             path = self._applied_id_path()
             try:
-                os.makedirs(self.checkpoint_dir, exist_ok=True)
-                with open(f"{path}.tmp", "w", encoding="utf-8") as f:
-                    f.write(str(max_id))
-                os.replace(f"{path}.tmp", path)
+                write_atomic(path, str(max_id))
             except OSError as e:
                 warnings.warn(
                     f"could not persist the applied-id mark to {path}: {e}",
@@ -418,13 +348,19 @@ class WalStreamConsumer:
         self._backlog_cache = None
 
     def _load_applied_id(self) -> None:
+        """Recover the persisted mark; none on disk means no batch was
+        applied yet. Any other failure raises: read as "never applied", a
+        damaged mark would make backlog() count the whole WAL."""
         if self._last_applied_id is not None:
             return
+        path = self._applied_id_path()
         try:
-            with open(self._applied_id_path(), encoding="utf-8") as f:
+            with open(path, encoding="utf-8") as f:
                 self._last_applied_id = int(f.read().strip())
-        except (OSError, ValueError):
+        except FileNotFoundError:
             pass
+        except (OSError, ValueError) as e:
+            raise ValueError(f"unreadable applied-id mark {path}: {e}") from e
 
     def backlog(self, max_age: float = 60.0) -> int:
         """R14 backlog gauge with the reference's semantics: the COUNT of

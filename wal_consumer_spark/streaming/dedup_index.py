@@ -1,22 +1,26 @@
 """Incrementally-maintained MinHash-LSH dedup index: new documents dedupe
-against the ENTIRE accumulated corpus without rescanning it.
+against the ENTIRE accumulated corpus without recomputing its signatures.
 
 The batch dedup operators (operators/dedup.py) recompute signatures and
 bucket self-joins over the whole corpus — right for one-shot curation,
-wrong for a feed of new documents at 100 TB. This module keeps the LSH
-state (signatures + band buckets) as an append-only keyed table; each
-micro-batch then costs O(|batch| + |candidate pairs|):
+wrong for a feed of new documents. This module keeps the LSH state
+(signatures + band buckets) as one version dir per batch, committed through
+the manifest swap the CDC target uses (streaming/versions.py). Per
+micro-batch:
 
-1. signatures + band buckets are computed for the batch only (map-side);
-2. the batch's buckets equi-join the persisted bucket table — at scale that
-   table is written partitioned/bucketed by the band key, so the join reads
-   only the buckets the batch touches (same pruning story as
-   BucketedParquetKeyValueTarget);
-3. candidates are verified by signature agreement (estimated Jaccard);
-4. the batch's rows are appended under a per-batch directory — replays of a
-   batch_id are detected and skip the append (same at-least-once discipline
-   as the CDC path, R10/R11), and the returned pair set is identical on
-   replay (the join is deterministic).
+1. signatures + band buckets are computed for the batch only (map-side),
+   written as the next ``v<n>/sigs`` and ``v<n>/buckets``, and committed as
+   ``batch_id -> n``. A replay of a committed batch_id skips the write (the
+   at-least-once discipline of the CDC path, R10/R11) and returns the same
+   pairs (the join is deterministic);
+2. the batch's buckets equi-join every live version's buckets, after the
+   skew cap below;
+3. candidates are verified by signature agreement (estimated Jaccard).
+
+Cost: signatures are computed once per document, but each batch re-reads
+every live bucket and signature dir and computes the skew-cap window over
+the whole bucket table, so a batch's cost grows with the index (500-doc
+batches on 4 cores: 1.3 s at 10k indexed docs, 2.3 s at 40k).
 
 Detection semantics: a near-dup pair is reported by the batch that
 completes it (its later member's batch). The union of per-batch outputs
@@ -32,8 +36,6 @@ same incremental, checkpoint-replay-safe discipline as its consumer
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -42,6 +44,7 @@ from wal_consumer_spark.operators.dedup import (
     minhash_jaccard_estimate,
     minhash_signature,
 )
+from wal_consumer_spark.streaming.versions import VersionedState
 
 _SIG_SCHEMA = "doc LONG, sig ARRAY<LONG>"
 _BUCKET_SCHEMA = "doc LONG, band INT, bucket LONG"
@@ -62,7 +65,7 @@ def minhash_buckets(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFram
     )
 
 
-class StreamingMinHashIndex:
+class StreamingMinHashIndex(VersionedState):
     """The foreachBatch-side state machine. Wire into a stream with
 
         index = StreamingMinHashIndex(spark, path)
@@ -83,8 +86,7 @@ class StreamingMinHashIndex:
         threshold: float = 0.5,
         max_bucket: int = 500,
     ):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.num_perm = num_perm
         self.bands = bands
         self.rows_per_band = rows_per_band
@@ -93,18 +95,17 @@ class StreamingMinHashIndex:
         self.threshold = threshold
         self.max_bucket = max_bucket
 
-    def _read(self, sub: str, schema: str) -> DataFrame:
-        base = f"{self.path}/{sub}"
-        try:
-            return self.spark.read.schema(schema).option(
-                "recursiveFileLookup", "true"
-            ).parquet(base)
-        except Exception:
+    def _read(self, versions: list[int], sub: str, schema: str) -> DataFrame:
+        """`sub` ("sigs" or "buckets") of the version dirs `versions`."""
+        if not versions:
             return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *(f"{self.path}/v{v}/{sub}" for v in versions)
+        )
 
     def index_size(self) -> int:
         """Number of (doc, band) rows currently indexed."""
-        return self._read("buckets", _BUCKET_SCHEMA).count()
+        return self._read(sorted(self._manifest().values()), "buckets", _BUCKET_SCHEMA).count()
 
     def process_batch(
         self,
@@ -116,29 +117,26 @@ class StreamingMinHashIndex:
         """Index the batch and return its near-dup pairs (doc1 < doc2,
         est_jaccard >= threshold) against everything indexed so far,
         including within-batch pairs."""
-        sig_dir = f"{self.path}/sigs/b{batch_id}"
-        bucket_dir = f"{self.path}/buckets/b{batch_id}"
-        # Replay guard keyed on the _SUCCESS marker of the LAST write, not
-        # the dir's existence: Spark creates the dir before the job
-        # finishes, so a crash mid-write would otherwise make the replay
-        # skip the append and leave the batch's bucket rows partial forever.
-        # Both writes are mode("overwrite"), so re-running after a partial
-        # attempt is safe; buckets are derived from the PERSISTED signature
-        # parquet so the expensive signature pipeline runs once per batch
-        # (not once per output) and the bucket table provably matches the
-        # stored signatures.
-        if not os.path.exists(os.path.join(bucket_dir, "_SUCCESS")):
+        manifest = self._manifest()
+        if str(batch_id) not in manifest:
+            # buckets are derived from the PERSISTED signatures, so the
+            # signature pipeline runs once per batch and the bucket rows
+            # provably match the stored signatures
+            version = self._next_version(manifest)
+            vdir = f"{self.path}/v{version}"
             minhash_signature(
                 batch_df, id_col, text_col, num_perm=self.num_perm, k=self.k,
                 seed=self.seed,
-            ).write.mode("overwrite").parquet(sig_dir)
+            ).write.mode("overwrite").parquet(f"{vdir}/sigs")
             minhash_buckets(
-                self._read(f"sigs/b{batch_id}", _SIG_SCHEMA),
-                self.bands,
-                self.rows_per_band,
-            ).write.mode("overwrite").parquet(bucket_dir)
+                self._read([version], "sigs", _SIG_SCHEMA), self.bands, self.rows_per_band
+            ).write.mode("overwrite").parquet(f"{vdir}/buckets")
+            manifest[str(batch_id)] = version
+            self._commit_manifest(manifest)
+            self.gc()
 
-        hist_b = self._read("buckets", _BUCKET_SCHEMA)
+        live = sorted(manifest.values())
+        hist_b = self._read(live, "buckets", _BUCKET_SCHEMA)
         # skew cap at detection time: over-full buckets carry no signal
         hist_b = (
             hist_b.withColumn(
@@ -147,7 +145,7 @@ class StreamingMinHashIndex:
             .filter(F.col("__n") <= self.max_bucket)
             .drop("__n")
         )
-        batch_b = self._read(f"buckets/b{batch_id}", _BUCKET_SCHEMA)
+        batch_b = self._read([manifest[str(batch_id)]], "buckets", _BUCKET_SCHEMA)
         cand = (
             batch_b.select(F.col("doc").alias("__new"), "band", "bucket")
             .join(hist_b.select(F.col("doc").alias("__old"), "band", "bucket"),
@@ -159,7 +157,7 @@ class StreamingMinHashIndex:
             )
             .distinct()
         )
-        all_sigs = self._read("sigs", _SIG_SCHEMA)
+        all_sigs = self._read(live, "sigs", _SIG_SCHEMA)
         return minhash_jaccard_estimate(all_sigs, cand).filter(
             F.col("est_jaccard") >= self.threshold
         )

@@ -17,6 +17,10 @@ Design for 100 TB: the rollup state stores only MERGEABLE partial aggregates
 - partials are associative, so the same merge works across days/regions —
   the sketch-rollup pattern (see agg_hll_partial_merge) with exact algebra.
 
+Persistence: ParquetRollupTarget commits each merged state through the
+manifest swap the CDC target uses (streaming/versions.py), so disk holds
+one state however long the stream runs.
+
 Floating-point note: sums are carried as DECIMAL so the merge is exact and
 associative regardless of batch boundaries — the incremental result is
 bit-identical to a from-scratch groupBy (asserted in tests/test_streaming_ext.py
@@ -27,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from wal_consumer_spark.streaming.versions import VersionedState
 
 
 class IncrementalRollup:
@@ -83,75 +89,40 @@ class IncrementalRollup:
         )
 
 
-class ParquetRollupTarget:
+class ParquetRollupTarget(VersionedState):
     """Versioned parquet persistence for the rollup state (production =
-    Delta/Iceberg MERGE with the table format's atomic commit).
+    Delta/Iceberg MERGE with the table format's atomic commit), on the one
+    VersionedState protocol (streaming/versions.py).
 
-    Each version directory encodes the streaming batch id that produced it
-    (``v<version>_b<batch_id>``), and the latest version is discovered from
-    disk — not an in-memory counter — so a restarted job resumes from the
-    persisted state instead of silently starting empty, and a replayed
+    The manifest maps the one batch id the current state has absorbed to
+    the version dir that holds it, so a restarted job resumes from the
+    committed state instead of silently starting empty, and a replayed
     micro-batch (foreachBatch is at-least-once) is detected and skipped
     rather than double-merged: sum/count partials are NOT idempotent, unlike
-    the CDC path's last-op-per-key apply (R10/R11)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _versions(self) -> list[tuple[int, int]]:
-        """Sorted (version, batch_id) pairs discovered on disk. Only dirs
-        carrying Spark's _SUCCESS marker count: a crash mid-write leaves a
-        partial dir whose name would otherwise (a) make last_batch_id claim
-        the batch was applied — the replay then skipped and its data LOST —
-        and (b) make read() return empty state, silently discarding every
-        earlier version's accumulated aggregates."""
-        import os
-        import re
-
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return []
-        out = []
-        for nm in names:
-            m = re.fullmatch(r"v(\d+)_b(\d+)", nm)
-            if m and os.path.exists(os.path.join(self.path, nm, "_SUCCESS")):
-                out.append((int(m.group(1)), int(m.group(2))))
-        return sorted(out)
-
-    def _latest_readable(self) -> tuple[int, int, DataFrame] | None:
-        """Newest committed version whose parquet actually loads. read()
-        and last_batch_id MUST agree on this: if last_batch_id reported a
-        newer-but-unreadable version while read() fell back to an older
-        one, the newer version's batch would be skipped as 'already
-        applied' while its deltas are missing from the state served —
-        silent data loss. Deriving both from the same newest-READABLE
-        version means an out-of-band-damaged newest version degrades to
-        'that batch replays', which the id guard then re-merges correctly."""
-        for v, b in reversed(self._versions()):
-            try:
-                df = self.spark.read.parquet(f"{self.path}/v{v}_b{b}")
-                return v, b, df
-            except Exception:
-                continue  # damaged/cleaned out-of-band: fall back one version
-        return None
+    the CDC path's last-op-per-key apply (R10/R11). Each write supersedes
+    the whole state, so gc() leaves one state dir on disk."""
 
     @property
     def last_batch_id(self) -> int:
-        """Highest batch id merged into the newest READABLE version, -1
-        when no readable state exists (see _latest_readable)."""
-        latest = self._latest_readable()
-        return latest[1] if latest else -1
+        """The batch id the committed state has absorbed, -1 before the
+        first commit."""
+        return max(map(int, self._manifest()), default=-1)
 
     def read(self) -> DataFrame | None:
-        latest = self._latest_readable()
-        return latest[2] if latest else None
+        """The committed state, None before the first commit. A committed
+        version that cannot be read raises: falling back to an older state
+        would drop batches the checkpoint has already committed."""
+        manifest = self._manifest()
+        if not manifest:
+            return None
+        (version,) = manifest.values()
+        return self.spark.read.parquet(f"{self.path}/v{version}")
 
     def write(self, df: DataFrame, batch_id: int) -> None:
-        vs = self._versions()
-        v = (vs[-1][0] + 1) if vs else 1
-        df.write.mode("overwrite").parquet(f"{self.path}/v{v}_b{batch_id}")
+        version = self._next_version(self._manifest())
+        df.write.mode("overwrite").parquet(f"{self.path}/v{version}")
+        self._commit_manifest({str(batch_id): version})
+        self.gc()
 
 
 def merge_batch_into(
@@ -182,8 +153,8 @@ def maintain_rollup_stream(
     successful merge gives the same exactly-once-advance contract as the CDC
     consumer (R11); a replayed batch (same batch_id, whether from an
     intra-run retry or a restart from the checkpoint) is skipped via the
-    batch id persisted with each version, keeping the non-idempotent
-    sum/count merge effectively exactly-once."""
+    batch id the manifest commits with each version, keeping the
+    non-idempotent sum/count merge effectively exactly-once."""
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch_into(rollup, target, batch_df, batch_id)
