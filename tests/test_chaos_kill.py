@@ -30,6 +30,7 @@ batches and the end state must equal the full oracle.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import random
@@ -263,7 +264,7 @@ def test_sigkill_mid_apply_manifest_last_soak(spark, tmp_path):
 # _release_lock, used unmodified via a real consumer instance): each cycle a
 # waiting consumer process (own process group) is first DENIED by the live
 # owner's lock, the owner's whole process group is then SIGKILLed mid-apply,
-# and the waiter must break the stale sentinel via the rename path, recover
+# and the waiter must take the lock the kernel released, recover
 # the bucketed target, verify the recovered state is an EXACT whole-batch
 # prefix of the oracle, and continue applying as the new owner.
 
@@ -472,7 +473,7 @@ def test_takeover_soak_lock_handoff_prefix_exact(spark, tmp_path):
         os.killpg(owner.pid, signal.SIGKILL)
         owner.wait()
         kills += 1
-        # the waiter must now break the stale sentinel and verify an
+        # the waiter must now take the released lock and verify an
         # exact whole-batch prefix before continuing
         lines = wait_for(
             lambda ls: any(
@@ -513,7 +514,11 @@ def test_takeover_soak_lock_handoff_prefix_exact(spark, tmp_path):
 
     # final state == full oracle, and the clean finisher released the lock
     assert _recovered_state(spark, tgt) == prefixes[TAKEOVER_BATCHES]
-    assert not os.path.exists(os.path.join(ckpt, "_wcs_lock"))
+    fd = os.open(os.path.join(ckpt, "_wcs_lock"), os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    finally:
+        os.close(fd)
 
 
 # ---------------------------------------------------------------------------

@@ -7,14 +7,18 @@ replay, callback, retry and warning behaviour, the window merge on a
 hand-built batch, counts taken once across a failed write, trigger
 durations, dead-version collection, superseded rows, corrupt manifests
 (of the rollup and the LSH index too), a corrupt applied-id mark, the
-backlog gauge, type routing across restarts and single-consumer
-exclusion."""
+backlog gauge, type routing across restarts, and the single-consumer
+lock: refusal, a failed start, the supervisor's backoff and the kernel's
+release of a SIGKILLed holder's lock."""
 
 from __future__ import annotations
 
+import fcntl
 import os
 import random
 import re
+import subprocess
+import sys
 import time
 
 import pyarrow as pa
@@ -31,7 +35,10 @@ from wal_consumer_spark.streaming import (
 from wal_consumer_spark.streaming.consumer import TARGET_SCHEMA
 from wal_consumer_spark.streaming.dedup_index import StreamingMinHashIndex
 from wal_consumer_spark.streaming.incremental import ParquetRollupTarget
+from wal_consumer_spark.streaming.metrics import WalState
 from wal_consumer_spark.streaming.routing import TypeRoutedTarget
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 N_BUCKETS = 64
 SEED_ROWS = 5_000
@@ -362,7 +369,8 @@ def test_a_failed_write_is_counted_once(spark, tmp_path):
 def test_io_errors_retry_and_analysis_errors_fail_fast(spark, tmp_path):
     """R9: an IO error is retried until the apply succeeds; an
     AnalysisException (a schema or plan bug no retry can fix) is raised at
-    once even with unbounded retries, and counted as a failure."""
+    once even with unbounded retries, and counted as a failure; so is the
+    ValueError of an unreadable manifest."""
     target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=N_BUCKETS)
     left = {"io": 2, "bad": 0}
 
@@ -389,6 +397,17 @@ def test_io_errors_retry_and_analysis_errors_fail_fast(spark, tmp_path):
     assert left["bad"] == 0
     assert consumer.metrics.num_io_failures == 3
     assert _state(target) == {1: b"a"}
+
+    # an unreadable manifest is no IO failure: raised at once, counted once
+    with open(target._manifest_path(), "w", encoding="utf-8") as f:
+        f.write("{not json")
+    strict = WalStreamConsumer(
+        spark, str(tmp_path / "wal"), str(tmp_path / "ckpt"), target,
+        sleep_on_io_failure=0.0, max_sync_retries=3,
+    )
+    with pytest.raises(ValueError, match=re.escape(target._manifest_path())):
+        strict._apply_batch(_batch(spark, [(3, 3, "ADD", b"c")]), 2)
+    assert strict.metrics.num_io_failures == 1
 
 
 def test_failed_applied_id_write_warns(spark, tmp_path):
@@ -435,9 +454,28 @@ def test_routed_state_survives_restarted_routers(spark, tmp_path):
         assert {n for n in os.listdir(target.path) if n.startswith("v")} == live, t
 
 
+def _lock_is_free(ckpt: str) -> bool:
+    """Whether a fresh non-blocking flock on the checkpoint lock succeeds."""
+    fd = os.open(f"{ckpt}/_wcs_lock", os.O_RDWR | os.O_CREAT)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        return True
+    except BlockingIOError:
+        return False
+    finally:
+        os.close(fd)
+
+
+def _listeners(spark) -> int:
+    return len(spark.streams._jsqm.listListeners())
+
+
 def test_second_consumer_on_an_active_checkpoint_fails_fast(spark, tmp_path):
     """R2-R4 in one process: while a consumer's query is active on a
-    checkpoint, a second consumer on that checkpoint fails at start()."""
+    checkpoint, a second consumer on that checkpoint fails at start(), and
+    closing the refused consumer leaves the owner's lock held. The owner
+    cannot start twice, and after its query stops it restarts on the lock
+    and the listener it already holds."""
     wal, ckpt = str(tmp_path / "wal"), str(tmp_path / "ckpt")
     os.makedirs(wal)
     _write_wal(f"{wal}/part-0000.parquet", [(1, 1, "ADD", b"a")], 1_700_000_000)
@@ -445,13 +483,119 @@ def test_second_consumer_on_an_active_checkpoint_fails_fast(spark, tmp_path):
     first = WalStreamConsumer(spark, wal, ckpt, target)
     second = WalStreamConsumer(spark, wal, ckpt, target)
     first.start()
+    listeners = _listeners(spark)
     try:
         with pytest.raises(RuntimeError, match="another WalStreamConsumer is active"):
             second.start()
         assert second.query is None
+        second.close()
+        assert not _lock_is_free(ckpt)
+        with pytest.raises(RuntimeError, match="active on checkpoint"):
+            first.start()
+        first.query.stop()
+        first.start()
+        assert first.query.isActive and not _lock_is_free(ckpt)
+        assert _listeners(spark) == listeners
     finally:
         first.close()
         second.close()
+
+
+def test_the_lock_is_held_through_the_supervisors_backoff(spark, tmp_path):
+    """A corrupt WAL file kills a supervised consumer's query; while its
+    supervisor sleeps before the restart, a second consumer on the same
+    checkpoint is still refused."""
+    wal, ckpt = tmp_path / "wal", str(tmp_path / "ckpt")
+    wal.mkdir()
+    (wal / "part-0000.parquet").write_bytes(b"not a parquet file")
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"))
+    first = WalStreamConsumer(
+        spark, str(wal), ckpt, target, trigger_interval="100 milliseconds",
+        sleep_on_io_failure=3.0,
+    )
+    second = WalStreamConsumer(spark, str(wal), ckpt, target)
+    first.start_supervised()
+    try:
+        deadline = time.monotonic() + 60
+        while first.metrics.state != WalState.INACCESSIBLE_IO_FAILURE:
+            assert time.monotonic() < deadline, "the supervised query never failed"
+            time.sleep(0.05)
+        assert not first.query.isActive
+        with pytest.raises(RuntimeError, match="another WalStreamConsumer is active"):
+            second.start()
+        assert second.query is None
+    finally:
+        second.close()
+        first.close()
+
+
+def test_a_failed_start_releases_the_lock_and_the_listener(spark, tmp_path):
+    """start() on a WAL dir that does not exist yet raises and keeps
+    neither the checkpoint lock nor a query listener; once the dir exists a
+    fresh consumer on the same checkpoint drains it."""
+    wal, ckpt = tmp_path / "wal", str(tmp_path / "ckpt")
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"))
+    consumer = WalStreamConsumer(spark, str(wal), ckpt, target)
+    listeners = _listeners(spark)
+    for _ in range(2):
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            consumer.start(available_now=True)
+    assert _listeners(spark) == listeners
+    assert _lock_is_free(ckpt)
+    consumer.close()
+
+    wal.mkdir()
+    _write_wal(f"{wal}/part-0000.parquet", [(1, 1, "ADD", b"a")], 1_700_000_000)
+    _drain(WalStreamConsumer(spark, str(wal), ckpt, target))
+    assert _state(target) == {1: b"a"}
+    assert _listeners(spark) == listeners
+
+
+#: takes the checkpoint lock through the production _acquire_lock, the way
+#: test_chaos_kill's takeover soak does, then waits to be killed
+_LOCK_HOLDER = """
+import sys, time
+sys.path.insert(0, sys.argv[1])
+from wal_consumer_spark.streaming.consumer import WalStreamConsumer
+
+class _LockHandle:
+    def __init__(self, checkpoint_dir):
+        self.checkpoint_dir = checkpoint_dir
+
+_LockHandle._lock_path = WalStreamConsumer._lock_path
+_LockHandle._acquire_lock = WalStreamConsumer._acquire_lock
+_LockHandle(sys.argv[2])._acquire_lock()
+print("locked", flush=True)
+time.sleep(600)
+"""
+
+
+def test_a_sigkilled_holders_lock_is_taken_at_once(spark, tmp_path):
+    """One JVM-free kill cycle: a child process holds the lock, so a
+    consumer is refused and the refusal names the child; once the child is
+    SIGKILLed, with no close() and its `_wcs_lock` left on disk, the same
+    consumer acquires at once."""
+    ckpt = str(tmp_path / "ckpt")
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"))
+    consumer = WalStreamConsumer(spark, str(tmp_path / "wal"), ckpt, target)
+    child = subprocess.Popen(
+        [sys.executable, "-c", _LOCK_HOLDER, REPO, ckpt], stdout=subprocess.PIPE, text=True
+    )
+    try:
+        assert child.stdout.readline().strip() == "locked"
+        with pytest.raises(RuntimeError, match=f"locked by live consumer process {child.pid}"):
+            consumer._acquire_lock()
+    finally:
+        child.kill()
+        child.wait()
+        child.stdout.close()
+    assert os.path.exists(f"{ckpt}/_wcs_lock")
+    consumer._acquire_lock()
+    try:
+        assert not _lock_is_free(ckpt)
+    finally:
+        consumer._release_lock()
+    assert _lock_is_free(ckpt)
 
 
 def test_superseded_rows_do_not_come_back(spark, tmp_path):

@@ -378,60 +378,35 @@ def test_source_failure_backoff_and_recovery(spark, tmp_path):
 
 
 def test_cross_process_lock_sentinel(spark, tmp_path):
-    """Single-consumer exclusion holds across processes: even with no
-    in-process registry state, a second consumer on the same checkpoint
-    fails fast on the lock sentinel; a sentinel from a dead process is
-    broken and taken over."""
+    """Single-consumer exclusion is the kernel's flock on `_wcs_lock`: a lock
+    held through another fd, as another process's would be, refuses start()
+    and the refusal names the pid in the file; a `_wcs_lock` left behind by
+    a dead process holds no lock, so a consumer takes it and drains."""
+    import fcntl
     import os
 
-    from wal_consumer_spark.streaming import consumer as consumer_mod
-
-    wal, ckpt, tgt = str(tmp_path / "wal"), str(tmp_path / "ckpt"), str(tmp_path / "tgt")
+    wal = str(tmp_path / "wal")
+    target = BucketedParquetKeyValueTarget(spark, str(tmp_path / "tgt"), n_buckets=8)
     _write_wal_file(spark, wal, [(1, "ADD", "a1")], start_id=1)
-    c1 = WalStreamConsumer(spark, wal, ckpt, BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8))
-    c1.start()
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    fd = os.open(ckpt / "_wcs_lock", os.O_RDWR | os.O_CREAT)
     try:
-        # simulate a different process: wipe the in-process registry so only
-        # the on-disk sentinel can enforce exclusion... except the sentinel
-        # records THIS live pid, which is exactly the cross-process case of
-        # a live foreign owner.
-        saved = set(consumer_mod._ACTIVE_CONSUMERS)
-        consumer_mod._ACTIVE_CONSUMERS.clear()
-        lock = f"{ckpt}/_wcs_lock"
-        with open(lock, "w", encoding="utf-8") as f:
-            f.write("999999999")  # a pid that cannot be alive
-
-        def fake_alive(pid):
-            return pid == 999999999
-
-        orig_alive = consumer_mod._pid_alive
-        consumer_mod._pid_alive = fake_alive
-        try:
-            c2 = WalStreamConsumer(
-                spark, wal, ckpt, BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8)
-            )
-            import pytest
-
-            with pytest.raises(RuntimeError, match="locked by live consumer"):
-                c2.start()
-        finally:
-            consumer_mod._pid_alive = orig_alive
-        # dead-owner sentinel: with the real liveness check, pid 999999999
-        # is dead -> the lock is broken and the consumer takes over.
-        c3 = WalStreamConsumer(
-            spark, wal, str(tmp_path / "ckpt2"),
-            BucketedParquetKeyValueTarget(spark, tgt, n_buckets=8),
-        )
-        os.makedirs(f"{tmp_path}/ckpt2", exist_ok=True)
-        with open(f"{tmp_path}/ckpt2/_wcs_lock", "w", encoding="utf-8") as f:
-            f.write("999999999")
-        c3.start()
-        c3.close()
-        assert not os.path.exists(f"{tmp_path}/ckpt2/_wcs_lock")
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        os.write(fd, b"999999999")
+        c = WalStreamConsumer(spark, wal, str(ckpt), target)
+        with pytest.raises(RuntimeError, match="locked by live consumer process 999999999"):
+            c.start()
+        assert c.query is None
     finally:
-        consumer_mod._ACTIVE_CONSUMERS.clear()
-        consumer_mod._ACTIVE_CONSUMERS.update(saved)
-        c1.close()
+        os.close(fd)
+
+    # a dead process's leftover: the file stays, its lock died with it
+    ckpt2 = tmp_path / "ckpt2"
+    ckpt2.mkdir()
+    (ckpt2 / "_wcs_lock").write_text("999999999")
+    _drain(WalStreamConsumer(spark, wal, str(ckpt2), target))
+    assert _state(target) == {1: "a1"}
 
 
 def test_bucketed_target_replay_after_crash_no_duplicates(spark, tmp_path):

@@ -2,10 +2,13 @@
 re-expressed on Structured Streaming. Semantic mapping (SURVEY.md §2.A):
 
 - R1  source           -> readStream over an append-only parquet WAL dir
-- R2-R4 head lock/race -> replaced by checkpoint exclusivity: Spark allows
-                          one active query per checkpoint dir, so mutual
-                          exclusion needs no row lock (README.md:40-43's HA
-                          claim maps to restart supervision)
+- R2-R4 head lock/race -> an exclusive flock on `<checkpoint>/_wcs_lock`
+      ≙ the SELECT ... FOR UPDATE row lock (WalConsumer.java:208-217): the
+      kernel drops it when its holder dies, SIGKILL included, as the
+      database drops the row lock with its session; across hosts Spark's
+      checkpoint commit log (one active query per checkpoint) is the
+      backstop. A waiting consumer takes over once the holder is gone
+      (README.md:40-43's HA claim)
 - R5  callback         -> foreachBatch(apply); the callback receives the
                           per-key-reduced batch and applies it to the target
 - R6-R8 ADD/UPDATE/DELETE -> operators.cdc.merge_cdc, the one window per
@@ -16,8 +19,9 @@ re-expressed on Structured Streaming. Semantic mapping (SURVEY.md §2.A):
       one keyed target, which rewrites only the buckets the batch touches,
       commits a manifest, and has its dead versions swept after each batch
 - R9  retry forever on IO failure (WalConsumer.java:259-269) -> retry loop
-      inside foreachBatch with `sleep_on_io_failure` between attempts; an
-      AnalysisException (a schema or plan bug) fails the batch at once
+      inside foreachBatch with `sleep_on_io_failure` between attempts, for
+      an OSError or a JVM-side error; anything else, an AnalysisException
+      (a schema or plan bug) included, fails the batch at once
 - R10 idempotent-skip accounting (WalConsumer.java:271-278) -> merge_cdc
       flags each winning upsert whose payload the target slice already
       holds; an Observation on the written plan counts those flags and the
@@ -56,11 +60,15 @@ re-scans the batch's few WAL files instead.
 
 from __future__ import annotations
 
+import fcntl
+import os
 import time
 import warnings
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,21 +85,6 @@ from wal_consumer_spark.streaming.versions import VersionedState, write_atomic
 TARGET_SCHEMA = "entity_id LONG, entity_bytes BINARY, entity_type STRING"
 #: a target version's files: the target columns plus the row's bucket and version
 STORED_SCHEMA = f"{TARGET_SCHEMA}, __bucket INT, __version INT"
-
-#: consumers with a live query, for fail-fast checkpoint exclusivity (R2-R4)
-_ACTIVE_CONSUMERS: set["WalStreamConsumer"] = set()
-
-
-def _pid_alive(pid: int) -> bool:
-    import os
-
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
 
 
 class BucketedParquetKeyValueTarget(VersionedState):
@@ -265,6 +258,7 @@ class WalStreamConsumer:
         self.query = None
         self._last_applied_id: int | None = None
         self._backlog_cache: tuple[int, float] | None = None
+        self._lock_fd: int | None = None
 
     # -- the foreachBatch body: ordered apply with retry + idempotency -----
 
@@ -303,8 +297,8 @@ class WalStreamConsumer:
             except Exception as e:
                 self.metrics.num_io_failures += 1
                 attempt += 1
-                # an AnalysisException is a schema or plan bug: no retry can fix it
-                if isinstance(e, AnalysisException) or (
+                io_failure = isinstance(e, (OSError, Py4JJavaError, CapturedException))
+                if isinstance(e, AnalysisException) or not io_failure or (
                     self.max_sync_retries is not None
                     and attempt > self.max_sync_retries
                 ):
@@ -396,29 +390,20 @@ class WalStreamConsumer:
         """≙ WalConsumer.start() (WalConsumer.java:127-133): begins draining;
         available_now=True processes the current backlog then stops (used by
         tests; production uses the processingTime trigger = R12 poll)."""
-        # R2-R4 mutual exclusion: the reference serializes consumers with a
-        # SELECT ... FOR UPDATE row lock (WalConsumer.java:208-217); here a
-        # checkpoint dir admits one active query. Spark enforces this lazily
-        # (the second query dies at its first commit), so fail fast instead —
-        # same guarantee, immediate error. Cross-process exclusion comes from
-        # the checkpoint's commit-log semantics on HDFS-compatible storage.
-        active_ckpts = {
-            c.checkpoint_dir
-            for c in _ACTIVE_CONSUMERS
-            if c.query is not None and c.query.isActive
-        }
-        if self.checkpoint_dir in active_ckpts:
+        if self.query is not None and self.query.isActive:
             raise RuntimeError(
-                f"another WalStreamConsumer is active on checkpoint "
-                f"{self.checkpoint_dir!r}; one consumer per checkpoint "
-                "(single-consumer lock semantics)"
+                f"this WalStreamConsumer is already active on checkpoint {self.checkpoint_dir!r}"
             )
-        self._acquire_lock()
-        _ACTIVE_CONSUMERS.add(self)
-
-        self._listener = WalQueryListener(self.metrics)
-        self.spark.streams.addListener(self._listener)
-        return self._start_query(available_now)
+        try:
+            if self._lock_fd is None:  # a stopped query's consumer keeps its lock
+                self._acquire_lock()
+            if self._listener is None:
+                self._listener = WalQueryListener(self.metrics)
+                self.spark.streams.addListener(self._listener)
+            return self._start_query(available_now)
+        except BaseException:
+            self.close()  # a failed start holds neither the lock nor a listener
+            raise
 
     def _start_query(self, available_now: bool = False):
         stream = read_wal_stream(self.spark, self.wal_dir, self.max_files_per_trigger)
@@ -488,85 +473,41 @@ class WalStreamConsumer:
         return f"{self.checkpoint_dir}/_wcs_lock"
 
     def _acquire_lock(self) -> None:
-        """Cross-process single-consumer exclusion (README.md:40-43,
-        WalConsumer.java:208-217's SELECT ... FOR UPDATE row lock): a
-        sentinel file created exclusively in the checkpoint dir. A sentinel
-        from a dead local process (crash without close()) is detected via
-        its recorded pid and broken; a live owner raises immediately instead
-        of dying later at Spark's first checkpoint-commit conflict. On
-        multi-host HDFS-compatible storage the pid liveness check does not
-        apply — there the sentinel still fail-fasts same-host restarts and
-        Spark's checkpoint commit log remains the cross-host backstop."""
-        import os
-
+        """R2-R4: an exclusive flock on `_wcs_lock`, held through an fd this
+        instance keeps (see the module docstring). It refuses a second open
+        in this process as in any other; fds are not inherited, so the JVM
+        child never holds it. The pid written only names the holder."""
         os.makedirs(self.checkpoint_dir, exist_ok=True)
-        my_pid = str(os.getpid())
-        while True:
-            try:
-                with open(self._lock_path(), "x", encoding="utf-8") as f:
-                    f.write(my_pid)
-                return
-            except FileExistsError:
-                try:
-                    with open(self._lock_path(), encoding="utf-8") as f:
-                        owner = int(f.read().strip() or "0")
-                except (FileNotFoundError, ValueError):
-                    continue  # owner vanished mid-check; retry acquisition
-                if owner and owner != os.getpid() and _pid_alive(owner):
-                    raise RuntimeError(
-                        f"checkpoint {self.checkpoint_dir!r} is locked by "
-                        f"live consumer process {owner}; one consumer per "
-                        "checkpoint (single-consumer lock semantics)"
-                    )
-                # Stale sentinel (dead process) or re-entry by this process.
-                # Break it with an atomic RENAME, not a remove: two racers
-                # that both saw the stale pid would otherwise both remove —
-                # the second remove deleting the first racer's FRESH lock
-                # and letting both become owners. rename succeeds for
-                # exactly one breaker; the loser re-enters the loop and sees
-                # the winner's live lock.
-                stale = f"{self._lock_path()}.stale.{os.getpid()}"
-                try:
-                    os.rename(self._lock_path(), stale)
-                except FileNotFoundError:
-                    continue  # another process broke it first; recompete
-                # Verify we renamed the dead sentinel we inspected and not a
-                # FRESH lock a racer created between our read and rename
-                # (or a mid-write lock read back as empty/owner-0): if the
-                # renamed file holds a live foreign pid, hand it back and
-                # recompete.
-                try:
-                    with open(stale, encoding="utf-8") as f:
-                        grabbed = int(f.read().strip() or "0")
-                except (FileNotFoundError, ValueError):
-                    grabbed = 0
-                if grabbed and grabbed != os.getpid() and _pid_alive(grabbed):
-                    try:
-                        os.rename(stale, self._lock_path())
-                    except OSError:
-                        pass  # a newer lock appeared; the live owner re-locks
-                    continue
-                try:
-                    os.remove(stale)
-                except FileNotFoundError:
-                    pass
+        fd = os.open(self._lock_path(), os.O_RDWR | os.O_CREAT, 0o644)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            with os.fdopen(fd, encoding="utf-8") as f:
+                holder = f.read().strip() or "?"
+            raise RuntimeError(
+                f"another WalStreamConsumer is active on checkpoint "
+                f"{self.checkpoint_dir!r} (locked by live consumer process {holder})"
+            ) from None
+        except OSError:
+            os.close(fd)
+            raise
+        self._lock_fd = fd
+        os.ftruncate(fd, 0)
+        os.write(fd, str(os.getpid()).encode())
 
     def _release_lock(self) -> None:
-        import os
-
-        try:
-            with open(self._lock_path(), encoding="utf-8") as f:
-                if f.read().strip() == str(os.getpid()):
-                    os.remove(self._lock_path())
-        except (FileNotFoundError, ValueError):
-            pass
+        """Drop the lock if this instance holds it; the file stays, and the
+        next holder's flock on it is what counts."""
+        if self._lock_fd is not None:
+            os.close(self._lock_fd)
+            self._lock_fd = None
 
     def await_backlog_drained(self, timeout: float | None = None) -> None:
         self.query.awaitTermination(timeout)
 
     def close(self) -> None:
         """≙ WalConsumer.close() (WalConsumer.java:299-317): stop the query,
-        deregister metrics listener."""
+        deregister the metrics listener, release the checkpoint lock."""
         self._stop_supervisor = True
         if self.query is not None and self.query.isActive:
             self.query.stop()
@@ -581,4 +522,3 @@ class WalStreamConsumer:
             self.spark.streams.removeListener(self._listener)
             self._listener = None
         self._release_lock()
-        _ACTIVE_CONSUMERS.discard(self)

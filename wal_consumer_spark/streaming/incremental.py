@@ -23,8 +23,9 @@ one state however long the stream runs.
 
 Floating-point note: sums are carried as DECIMAL so the merge is exact and
 associative regardless of batch boundaries — the incremental result is
-bit-identical to a from-scratch groupBy (asserted in tests/test_streaming_ext.py
-and oracle-checked by the `agg_incremental_rollup` query).
+bit-identical to a from-scratch groupBy (asserted by
+tests/test_streaming_ext.py::test_incremental_rollup_stream_matches_batch
+and by the rollup SIGKILL soak in tests/test_chaos_kill.py).
 """
 
 from __future__ import annotations
