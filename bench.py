@@ -1,13 +1,21 @@
 #!/usr/bin/env python
 """Headline benchmark: runs the engine's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: one task slot per CPU) and prints ONE
+JSON line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+     "queries": {"q1": sec, ...}, "sf": 0.1, ...}
 
 Each query is materialized through the noop sink (full execution, no
-driver-side collect)."""
+driver-side collect). The full record (every query's median and samples,
+plus a `host` block) goes to BENCH_DETAIL_r<N>.json, N one past the newest
+record on disk, so a run never writes over a committed one.
+
+The regression tripwire compares raw per-query medians against the newest
+earlier record whose `host` block and `sf` equal this run's. Seconds from
+another host are never compared: with no such record the run says it has
+no baseline (`tripwire_baseline_round: null`)."""
 
 from __future__ import annotations
 
@@ -164,32 +172,6 @@ HEADLINE = [
     "analytics_logrank_test",
 ]
 
-#: FROZEN cross-round comparison basis (round-4 VERDICT "What's wrong" #2:
-#: the r5 judge should diff rounds without archaeology). These are exactly
-#: the 41 queries whose per-pass samples survive in the committed
-#: BENCH_r03.json record (its stdout tail truncated the first 6 suite
-#: entries), i.e. the same 41 the round-4 judge compared. Do NOT edit this
-#: list — new queries go to HEADLINE only.
-COMPARABLE_41 = [
-    "tpch_q21_waiting_supplier", "asof_join_events_orders",
-    "win_running_sum", "agg_rollup", "agg_count_distinct",
-    "cdc_apply_final_state", "stream_window_tumbling", "dedup_exact_hash",
-    "dedup_minhash_lsh", "sim_topk_bruteforce", "text_quality",
-    "multimodal_decode_meta", "pipeline_corpus_curation",
-    "stream_incremental_rollup", "win_sessionize_gap",
-    "scalar_string_funcs", "udf_pandas_scalar", "agg_hll_partial_merge",
-    "dedup_simhash", "sim_embedding_near_dup", "pipeline_decontaminate",
-    "pipeline_sequence_packing", "pipeline_domain_mixture",
-    "sql_front_agg_join", "ts_resample_locf", "analytics_cohort_retention",
-    "graph_pagerank", "ml_feature_scaling", "join_fuzzy_name_pairs",
-    "sim_doc_cosine_sparse", "join_bloom_prefilter",
-    "analytics_market_basket", "sim_ann_recall_eval",
-    "ts_changepoint_cusum", "text_shingle_novelty",
-    "pipeline_mixture_temperature", "text_bigram_logprob",
-    "graph_jaccard_neighbors", "dq_reconcile_totals", "udf_map_in_arrow",
-    "ml_decision_stump",
-]
-
 #: FROZEN stdout manifest (VERDICT r12 "Next round" #3). The grading
 #: driver keeps only the last ~2000 chars of combined output, so the
 #: compact stdout line can never carry all ~97 medians (measured: 3.2k
@@ -229,87 +211,88 @@ COMPACT_MANIFEST = [
     "ts_theil_sen_slope",
 ]
 
-#: Calibration anchor: the committed BENCH_DETAIL_r03 session's fixed-probe
-#: cpu_sec. Multiplying a session's raw medians by ANCHOR_CPU_SEC /
-#: this_session_cpu_sec expresses them in "r3-host seconds", separating
-#: engine deltas from host deltas (observed: r4's driver session probed
-#: 0.262 — 26% slower than r3's 0.208 — and every unchanged plan shifted
-#: by exactly that factor).
-ANCHOR_CPU_SEC = 0.208
+HERE = os.path.dirname(os.path.abspath(__file__))
 
-#: A comparable-41 query whose calibration-normalized median exceeds the
-#: previous committed round's by more than this factor gets flagged in the
-#: bench JSON (VERDICT r5 "Next round" #6: the r4 join_bloom_prefilter
-#: "regression" took a round of measurement archaeology to dismiss as
-#: 3-sample noise — the tripwire turns that into an automatic signal).
+#: A query whose raw median exceeds the same-host baseline record's by more
+#: than this factor gets flagged in the bench JSON (VERDICT r5 "Next round"
+#: #6: the r4 join_bloom_prefilter "regression" took a round of measurement
+#: archaeology to dismiss as 3-sample noise — the tripwire turns that into
+#: an automatic signal).
 TRIPWIRE_RATIO = 1.5
 
 
 def regression_tripwire(
-    normalized_queries: dict[str, float],
-    prev_normalized: dict[str, float],
-    comparable: list[str] = COMPARABLE_41,
+    queries: dict[str, float],
+    prev_queries: dict[str, float],
     threshold: float = TRIPWIRE_RATIO,
 ) -> dict:
-    """Flag comparable-basis queries whose host-normalized median grew by
-    more than `threshold`x since the previous round. Pure function of the
-    two normalized blocks so the deliberate-regression unit test can feed
-    it synthetic rounds."""
+    """Flag every query both runs measured whose raw median grew by more
+    than `threshold`x over the baseline's. Pure function of the two median
+    maps so the deliberate-regression unit test can feed it synthetic
+    runs."""
     flagged = {}
-    for name in comparable:
-        now, prev = normalized_queries.get(name), prev_normalized.get(name)
-        if now is None or not prev:
+    compared = 0
+    for name, now in queries.items():
+        prev = prev_queries.get(name)
+        if not prev:
             continue
+        compared += 1
         if now > prev * threshold:
             flagged[name] = {
-                "prev_normalized": prev,
-                "now_normalized": now,
+                "prev_median": prev,
+                "now_median": now,
                 "ratio": round(now / prev, 2),
             }
-    return {"threshold_ratio": threshold, "flagged": flagged}
+    return {"threshold_ratio": threshold, "compared": compared, "flagged": flagged}
 
 
-def _detail_round(fname: str) -> int | None:
-    """Round number encoded in a BENCH_DETAIL_r{NN}.json filename."""
-    stem = fname[len("BENCH_DETAIL_r"):-len(".json")]
-    return int(stem) if stem.isdigit() else None
+def host_block(spark) -> dict:
+    """What must match for two runs' seconds to be comparable: the
+    session's task slots, the machine's CPUs, RAM and CPU model, and the
+    Spark version."""
+    with open("/proc/cpuinfo", encoding="utf-8") as f:
+        model = next(
+            (line.split(":", 1)[1].strip() for line in f if line.startswith("model name")),
+            None,
+        )
+    return {
+        "cores": spark.sparkContext.defaultParallelism,
+        "nproc": len(os.sched_getaffinity(0)),
+        "ram_gib": round(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30, 1),
+        "cpu_model": model,
+        "spark": spark.version,
+    }
 
 
-def latest_committed_normalized(
-    here: str, before_round: int | None = None
-) -> tuple[str | None, dict[str, float], dict[str, float]]:
-    """Per-query medians (normalized AND raw) from the newest
-    BENCH_DETAIL_r*.json belonging to a PREVIOUS round.
+def detail_rounds(here: str) -> list[tuple[int, str]]:
+    """(round, filename) of every BENCH_DETAIL_r<N>.json in `here`, sorted
+    by the PARSED round number (lexicographic order would rank r100 before
+    r99, ADVICE r7)."""
+    out = []
+    for f in os.listdir(here):
+        stem = f[len("BENCH_DETAIL_r"):-len(".json")]
+        if f.startswith("BENCH_DETAIL_r") and f.endswith(".json") and stem.isdigit():
+            out.append((int(stem), f))
+    return sorted(out)
 
-    `before_round` is the round being benchmarked right now; only detail
-    files with round < before_round qualify as a baseline. Without this
-    fence, a mid-round re-run picks the current round's own earlier
-    snapshot as "the previous round" and the tripwire silently compares a
-    session to itself at a different calibration — exactly the bug that
-    shipped 7 false-positive flags in BENCH_r06 (VERDICT r6 "What's
-    wrong" #1)."""
-    # Sort by the PARSED round number, not the raw filename — lexicographic
-    # order would rank r100 before r99 (ADVICE r7).
-    details = sorted(
-        (
-            f for f in os.listdir(here)
-            if f.startswith("BENCH_DETAIL_r") and f.endswith(".json")
-        ),
-        key=lambda f: (_detail_round(f) is not None, _detail_round(f) or -1),
-    )
-    for f in reversed(details):
-        rnd = _detail_round(f)
-        if rnd is None or (before_round is not None and rnd >= before_round):
-            continue
+
+def same_host_baseline(
+    here: str, host: dict, sf: float
+) -> tuple[int | None, dict[str, float], dict[str, dict]]:
+    """(round, per-query raw medians, isolation block) of the newest
+    BENCH_DETAIL record in `here` whose `host` and `sf` equal this run's,
+    or (None, {}, {}) when none does. A record without `host` never
+    serves. A record that does not parse raises ValueError naming the
+    file: skipping it would silently make an older record the baseline."""
+    for rnd, f in reversed(detail_rounds(here)):
+        path = os.path.join(here, f)
         try:
-            with open(os.path.join(here, f)) as fh:
+            with open(path) as fh:
                 rec = json.load(fh)
-            norm = rec.get("normalized", {}).get("queries", {})
-            raw_med = rec.get("queries", {})
-            if norm:
-                return f, norm, raw_med
-        except (OSError, json.JSONDecodeError):
-            continue
+        except json.JSONDecodeError as ex:
+            raise ValueError(f"unreadable bench record {path}: {ex}") from ex
+        if rec.get("host") == host and rec.get("sf") == sf:
+            return rnd, rec["queries"], rec.get("isolation", {})
     return None, {}, {}
 
 
@@ -353,33 +336,26 @@ def isolate_one(name: str, sf_dir: str, n: int = 5, env: dict | None = None) -> 
 def auto_isolate_flags(
     tripwire: dict,
     prev_isolation: dict[str, dict],
-    prev_normalized: dict[str, float],
+    prev_queries: dict[str, float],
     sf_dir: str,
     threshold: float = TRIPWIRE_RATIO,
     runner=isolate_one,
 ) -> dict[str, dict]:
-    """Mechanized triage of tripwire flags (VERDICT r11 "Next round" #3).
+    """Mechanized triage of tripwire flags (VERDICT r11 "Next round" #3):
+    re-measure each flagged name in a fresh JVM that runs nothing else
+    (`runner`, tools/bench_one.py n=5), capped at ISOLATION_MAX_RUNS. Both
+    historical spurious flags (stream_window_tumbling r10,
+    multimodal_decode_meta r11) dissolved under exactly this measurement.
 
-    The <10% probe-spread gate for the calibrated basis never engages on
-    this container (measured host floor ~12-14%, SCALE.md §29), so every
-    round fell back to raw medians and the 1-2 resulting flags were
-    hand-triaged the same way each time: re-measure the query in a fresh
-    JVM (tools/bench_one.py n=5), normalize by THAT JVM's own cpu probe,
-    and compare against the query's previous fresh-JVM value. Both
-    historical spurious flags (stream_window_tumbling r10 at 0.38s raw,
-    multimodal_decode_meta r11 at 0.53s raw) dissolved under exactly this
-    measurement — so the triage now runs automatically for EVERY flagged
-    name (not only an expensive tier; the spurious flags were all cheap
-    queries), capped at ISOLATION_MAX_RUNS.
-
-    Baseline preference per name: the previous round's committed
-    isolation median for the same name (isolation-to-isolation is the
-    cleanest series), else the previous round's in-suite normalized
-    median (conservative: fresh-JVM numbers sit BELOW in-suite numbers,
-    so a noise flag still clears while a real regression still trips).
-    A flag whose isolated normalized median stays within `threshold`x of
-    its baseline moves from `flagged` to `isolated_clear` with the full
-    evidence row; survivors stay flagged with the evidence attached.
+    The isolated raw median is compared with a baseline from the
+    same-host record the flag was raised against: that record's own
+    isolation median for the name when it has one (isolation-to-isolation
+    is the cleanest series), else its in-suite median (fresh-JVM numbers
+    sit below in-suite ones, so a noise flag still clears while a real
+    regression still trips). A flag whose isolated median stays within
+    `threshold`x of its baseline moves from `flagged` to `isolated_clear`
+    with the full evidence row; survivors stay flagged with the evidence
+    attached.
 
     Returns the isolation block for the detail record (name -> evidence)
     and mutates `tripwire` in place."""
@@ -390,26 +366,18 @@ def auto_isolate_flags(
         rec = runner(name, sf_dir)
         if rec is None or not rec.get("median"):
             continue
-        iso_cpu = (rec.get("calibration") or {}).get("cpu_sec")
-        iso_norm = (
-            round(rec["median"] * ANCHOR_CPU_SEC / iso_cpu, 3)
-            if iso_cpu
-            else None
-        )
-        prev_iso = (prev_isolation.get(name) or {}).get("isolated_normalized")
+        prev_iso = (prev_isolation.get(name) or {}).get("isolated_median")
         if prev_iso:
             baseline, source = prev_iso, "prev_isolation"
         else:
-            baseline, source = prev_normalized.get(name), "prev_normalized"
+            baseline, source = prev_queries.get(name), "prev_median"
         row = {
             "isolated_median": rec["median"],
             "isolated_samples": rec.get("samples"),
-            "isolated_cpu_sec": iso_cpu,
-            "isolated_normalized": iso_norm,
             "baseline": baseline,
             "baseline_source": source,
         }
-        if iso_norm is not None and baseline and iso_norm <= baseline * threshold:
+        if baseline and rec["median"] <= baseline * threshold:
             row["verdict"] = "noise (cleared by fresh-JVM isolation)"
             cleared[name] = {**flagged.pop(name), **row}
         else:
@@ -426,8 +394,6 @@ def compact_stdout_line(
     timings: dict[str, float],
     sf: float,
     n_passes: int,
-    calibration: dict,
-    normalized_block: dict,
     tripwire: dict,
 ) -> str:
     """The ONE stdout line the grading driver parses — factored out so the
@@ -440,27 +406,26 @@ def compact_stdout_line(
     the old "top 40 by median" fallback churned with relative speed and
     round 12's four fastest-improving queries read as dropped. Every
     measured query's median is in BENCH_DETAIL_r{N}.json; flags are
-    capped at 5 names + a total count (full list in the detail file)."""
+    capped at 5 names + a total count (full list in the detail file).
+    `tripwire_baseline_round` is null when no same-host record exists,
+    so zero flags then reads as "not compared", not as "clean"."""
     compact = {
         "metric": "headline_suite_seconds",
         "value": total,
         "unit": "sec",
         "queries": {n: timings[n] for n in COMPACT_MANIFEST if n in timings},
         "sf": sf,
-        "bench_version": 8,
+        "bench_version": 9,
         "n_per_query": n_passes,
         # how many queries the suite actually measured this run (all of
         # HEADLINE; medians for every one are in the detail file)
         "queries_measured": len(timings),
-        # host-normalized scalars (full per-query block in BENCH_DETAIL)
-        "calibration_cpu_sec": calibration["cpu_sec"],
-        "normalized_value": normalized_block["value"],
-        "normalized_comparable_41_sum": normalized_block["comparable_41_sum"],
+        "tripwire_baseline_round": tripwire["baseline_round"],
         "tripwire_flagged": sorted(tripwire["flagged"])[:5],
         "tripwire_n_flagged": len(tripwire["flagged"]),
     }
     line = json.dumps(compact, separators=(",", ":"))
-    # Realistic lines measure ~1.73-1.89k chars; only a pathological suite
+    # Realistic lines measure ~1.7k chars; only a pathological suite
     # (every median >= 10 s AND 5 max-length flags) crosses 1900 — then
     # drop the flag NAMES (never query medians; the count and the detail
     # file still carry the signal).
@@ -492,58 +457,6 @@ def warmup(spark, sf_dir: str) -> None:
     spark.range(64).mapInPandas(
         lambda it: (pdf for pdf in it), "id long"
     ).write.format("noop").mode("overwrite").save()
-
-
-def calibrate(spark, sf_dir: str) -> dict:
-    """Fixed workload probes that never change across rounds, so a
-    cross-round reader can separate ENGINE deltas from ENVIRONMENT
-    deltas (observed r2->r3: every query — including ones whose plans
-    did not change at all — shifted uniformly +20-25% after a host
-    restart; without a calibration constant that reads as a fleet-wide
-    regression). cpu_sec: pure JVM codegen arithmetic, no IO.
-    scan_sec: full lineitem parquet scan+sum. Median of 5 each (was 3;
-    VERDICT r6 "What's wrong" #2: a one-shot/3-shot probe swings ±25%
-    within a session, too noisy to anchor a 1.5x tripwire), plus the
-    probe SPREAD ((max-min)/median over the cpu samples) so readers —
-    and the tripwire basis selection — can see when the normalization
-    itself is noisier than the signal it corrects. The in-suite bench and
-    every fresh-JVM run (tools/bench_one.py) take this same probe, so an
-    isolated median and an in-suite baseline share one normalization."""
-    from pyspark.sql import functions as F
-
-    def probe(fn) -> tuple[float, list[float]]:
-        fn()  # untimed probe warmup: the first execution pays the
-        # probe's own whole-stage-codegen compilation (~2.4x observed),
-        # which would otherwise dominate the spread metric and force
-        # the raw-median fallback even on a quiet host
-        ts = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(round(time.perf_counter() - t0, 3))
-        return statistics.median(ts), ts
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    cpu_med, cpu_samples = probe(
-        lambda: spark.range(200_000_000)
-        .selectExpr("sum(xxhash64(id) % 1000)")  # bounded: no ANSI overflow
-        .write.format("noop").mode("overwrite").save()
-    )
-    scan_med, scan_samples = probe(
-        lambda: li.agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
-        ).write.format("noop").mode("overwrite").save()
-    )
-    return {
-        "cpu_sec": cpu_med,
-        "scan_sec": scan_med,
-        "cpu_samples": cpu_samples,
-        "scan_samples": scan_samples,
-        "cpu_spread": round((max(cpu_samples) - min(cpu_samples)) / cpu_med, 3)
-        if cpu_med
-        else None,
-        "n_probe": 5,
-    }
 
 
 def release_persisted(spark) -> None:
@@ -584,6 +497,16 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     spark = get_spark(app_name="wcs-bench")
     spark.sparkContext.setLogLevel("ERROR")
+
+    # The round is one past the newest record on disk, so this run never
+    # writes over a committed record and can never serve as its own
+    # baseline (VERDICT r6 "What's wrong" #1). The baseline is read before
+    # anything is timed: an unreadable record stops the run at once.
+    host = host_block(spark)
+    rounds = detail_rounds(HERE)
+    rnd = rounds[-1][0] + 1 if rounds else 0
+    prev_round, prev_queries, prev_isolation = same_host_baseline(HERE, host, sf)
+
     specs = all_specs()
     warmup(spark, sf_dir)
 
@@ -596,7 +519,6 @@ def main() -> None:
     # noisy wall-clock era doesn't bias a single query's three samples.
     n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    calibration = calibrate(spark, sf_dir)
 
     # One untimed full-suite pass first: the generic warmup above covers
     # scan/codegen/Arrow machinery, but each query still pays its own
@@ -627,70 +549,16 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     raw = {name: [round(x, 3) for x in xs] for name, xs in samples.items()}
 
-    # Calibration-normalized medians (round-4 VERDICT "Next round" #3):
-    # raw medians x (anchor cpu probe / this session's cpu probe) — i.e.
-    # every round's numbers expressed in r3-host seconds. Cross-round
-    # deltas in THIS block are engine deltas; deltas in the raw block
-    # conflate engine and host.
-    norm_factor = round(ANCHOR_CPU_SEC / calibration["cpu_sec"], 4)
-    normalized = {n: round(t * norm_factor, 3) for n, t in timings.items()}
-    comparable = {n: normalized[n] for n in COMPARABLE_41 if n in normalized}
-    normalized_block = {
-        "anchor_cpu_sec": ANCHOR_CPU_SEC,
-        "session_cpu_sec": calibration["cpu_sec"],
-        "factor": norm_factor,
-        "queries": normalized,
-        "value": round(sum(normalized.values()), 3),
-        "comparable_41_sum": round(sum(comparable.values()), 3),
-        "comparable_41": comparable,
-    }
-
-    # Automatic cross-round regression signal (VERDICT r5 "Next round" #6):
-    # compare this session's medians against the newest PREVIOUS-round
-    # BENCH_DETAIL record on the frozen comparable-41 basis. The round
-    # number is computed first so a same-round snapshot can never serve as
-    # its own baseline (VERDICT r6 "What's wrong" #1). Basis selection
-    # (VERDICT r6 "What's wrong" #2): the calibration normalization only
-    # helps when the probe itself is stable — when this session's probe
-    # spread exceeds 10%, the tripwire compares RAW medians instead, and
-    # the record says which basis was used.
-    here_dir = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(f[len("BENCH_r"):-len(".json")])
-        for f in os.listdir(here_dir)
-        if f.startswith("BENCH_r") and f.endswith(".json")
-        and f[len("BENCH_r"):-len(".json")].isdigit()
-    ]
-    rnd = (max(rounds) + 1) if rounds else 0
-    prev_file, prev_norm, prev_raw_med = latest_committed_normalized(
-        here_dir, before_round=rnd
-    )
-    probe_noisy = (calibration.get("cpu_spread") or 0.0) > 0.10
-    if probe_noisy and prev_raw_med:
-        tripwire = regression_tripwire(timings, prev_raw_med)
-        tripwire["basis"] = "raw_median (probe spread > 10%)"
-    else:
-        tripwire = regression_tripwire(normalized, prev_norm)
-        tripwire["basis"] = "normalized"
-    tripwire["baseline_file"] = prev_file
-    tripwire["baseline_round"] = _detail_round(prev_file) if prev_file else None
+    # Automatic regression signal (VERDICT r5 "Next round" #6): raw
+    # medians against the same-host baseline, then fresh-JVM triage of
+    # whatever flagged (VERDICT r11 "Next round" #3) against the same
+    # record's isolation rows and medians.
+    tripwire = regression_tripwire(timings, prev_queries)
+    tripwire["baseline_round"] = prev_round
     tripwire["current_round"] = rnd
-    tripwire["probe_spread"] = calibration.get("cpu_spread")
-
-    # Automatic fresh-JVM triage of whatever flagged (VERDICT r11 "Next
-    # round" #3): re-measure each flagged name in a JVM that has run
-    # nothing else and clear flags that dissolve there — the manual
-    # procedure of rounds 9-11, now part of the record itself. Reads the
-    # baseline round's isolation block (if any) so the comparison series
-    # is isolation-to-isolation once a name has been isolated before.
-    prev_isolation: dict[str, dict] = {}
-    if prev_file:
-        try:
-            with open(os.path.join(here_dir, prev_file)) as fh:
-                prev_isolation = json.load(fh).get("isolation", {})
-        except (OSError, json.JSONDecodeError):
-            pass
-    isolation = auto_isolate_flags(tripwire, prev_isolation, prev_norm, sf_dir)
+    if prev_round is None:
+        print("tripwire: no same-host baseline record; nothing compared", file=sys.stderr)
+    isolation = auto_isolate_flags(tripwire, prev_isolation, prev_queries, sf_dir)
 
     # Full methodology record goes to a SIDE FILE, not stdout: the grading
     # driver keeps only the last 2000 chars of stdout, and the round-3
@@ -709,48 +577,38 @@ def main() -> None:
         # execution only; r2 = min-of-2 timing construction+execution
         # (shifted construction-heavy entries: dedup_simhash,
         # sim_embedding_near_dup); r3+ = median-of-3, same
-        # construction+execution span as r2; r5 (v6) adds the normalized
-        # block + frozen comparable-41 basis; r13 (v8) freezes the compact
-        # stdout line's query map to COMPACT_MANIFEST (timing methodology
-        # unchanged — the timed span, warmup and pass structure are
-        # identical to v7; only the stdout emission changed).
-        "bench_version": 8,
+        # construction+execution span as r2; v6-v8 also scaled medians
+        # by a CPU probe, and v8 froze the compact stdout line's query map
+        # to COMPACT_MANIFEST; v9 drops the probe and its scaled block and
+        # adds `host` (the timed span, warmup and pass structure are
+        # unchanged since v7).
+        "bench_version": 9,
         "method": f"median-of-{n_passes} steady-state passes after "
                   "one untimed full-suite warmup pass; "
                   "construction+execution; single shared JVM; "
                   "persisted RDDs/cache released between queries",
         "n_per_query": n_passes,
-        # Raw per-pass samples (suite-order round-robin): lets a
-        # cross-round reader separate plan cost from session noise.
-        # NOTE r1->r2 comparability: r1 timed EXECUTION only; r2+
-        # times construction+execution (~0.7-1.0 s of Catalyst analysis
-        # on the big minhash/simhash expression trees).
+        # The machine and session these seconds belong to; a later run
+        # baselines against this record only if its block is equal.
+        "host": host,
+        # Raw per-pass samples (suite-order round-robin): lets a reader
+        # separate plan cost from session noise.
         "samples": raw,
-        # Fixed-workload environment probes (identical code every
-        # round): divide query timings by the calibration ratio
-        # before reading a cross-round delta as a regression.
-        "calibration": calibration,
-        # Host-normalized medians + the FROZEN 41-query cross-round
-        # comparison basis (see COMPARABLE_41 above).
-        "normalized": normalized_block,
-        # >1.5x normalized growth vs the previous committed round on the
-        # comparable-41 basis (empty flagged = no regression signal).
+        # >1.5x raw-median growth vs the same-host baseline record
+        # (baseline_round null = nothing compared, not "clean").
         "tripwire": tripwire,
         # Fresh-JVM evidence rows for every name the triage isolated this
-        # session (empty when nothing flagged). Next round's triage
-        # baselines against these in preference to in-suite medians.
+        # session (empty when nothing flagged). A later same-host run's
+        # triage baselines against these before in-suite medians.
         "isolation": isolation,
     }
 
-    detail_path = os.path.join(here_dir, f"BENCH_DETAIL_r{rnd:02d}.json")
-    with open(detail_path, "w") as fh:
+    detail_path = os.path.join(HERE, f"BENCH_DETAIL_r{rnd:02d}.json")
+    with open(detail_path, "x") as fh:
         json.dump(detail, fh, indent=1)
     print(f"detail -> {detail_path}", file=sys.stderr)
 
-    line = compact_stdout_line(
-        total, timings, sf, n_passes, calibration, normalized_block, tripwire
-    )
-    print(line)
+    print(compact_stdout_line(total, timings, sf, n_passes, tripwire))
     spark.stop()
 
 

@@ -11,14 +11,15 @@ change). A number measured here, in a JVM that has run NOTHING else, is
 the query's true plan cost; the delta vs the in-suite median is the
 suite's session overhead.
 
-The measurement steps are bench.py's own: `warmup`, the `calibrate`
-probe, one untimed run, then n runs of `time_query`, each followed by
-`release_persisted`. `bench.isolate_one` runs this script as a
-subprocess; `tools/scale_probe.py` does too, through `isolate_one`.
+The measurement steps are bench.py's own: `warmup`, one untimed run,
+then n runs of `time_query`, each followed by `release_persisted`.
+`bench.isolate_one` runs this script as a subprocess; `tools/scale_probe.py`
+does too, through `isolate_one`. The medians are raw seconds of the host
+the script runs on, comparable only with runs on the same host.
 
 Usage: python tools/bench_one.py QUERY [n] [sf_dir]
 Prints one JSON line: {"query", "sf_dir", "n", "samples", "median",
-"construct_sec", "calibration": {"cpu_sec", "scan_sec", ...}}.
+"construct_sec"}.
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
 
-    from bench import calibrate, release_persisted, time_query, warmup
+    from bench import release_persisted, time_query, warmup
     from wal_consumer_spark.plans import all_specs
     from wal_consumer_spark.session import get_spark
 
@@ -47,7 +48,6 @@ def main() -> int:
     spark = get_spark(app_name=f"wcs-bench-one-{name}")
     spark.sparkContext.setLogLevel("ERROR")
     warmup(spark, sf_dir)
-    calibration = calibrate(spark, sf_dir)
 
     # one untimed warmup run (per-query Catalyst analysis + codegen compile)
     time_query(spark, spec, sf_dir)
@@ -68,7 +68,6 @@ def main() -> int:
         "samples": [round(x, 3) for x in samples],
         "median": round(statistics.median(samples), 3),
         "construct_sec": round(statistics.median(construct), 3),
-        "calibration": calibration,
     }))
     spark.stop()
     return 0

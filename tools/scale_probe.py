@@ -16,6 +16,7 @@ with SPARK_GRAFT_CPUS set to the core count; a failed run writes its
 return code and stderr tail to stderr and its row reads "run failed".
 
 Usage: python tools/scale_probe.py [SF_DIR] [HI] [LO] [N_PER_QUERY] [NAME...]
+HI defaults to this host's CPU count and LO to half of HI.
 Writes one JSON line per query and a summary JSON to stdout; full record
 appended nowhere (caller commits the output, e.g. into SCALE.md / the
 round's OPTIMIZATION file).
@@ -48,8 +49,8 @@ DEFAULT_TARGETS = [
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
-    hi = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-    lo = int(sys.argv[3]) if len(sys.argv) > 3 else 8
+    hi = int(sys.argv[2]) if len(sys.argv) > 2 else len(os.sched_getaffinity(0))
+    lo = int(sys.argv[3]) if len(sys.argv) > 3 else max(1, hi // 2)
     n = int(sys.argv[4]) if len(sys.argv) > 4 else 2
     names = sys.argv[5:] or DEFAULT_TARGETS
     out: dict[str, dict] = {}
@@ -70,8 +71,6 @@ def main() -> int:
             f"construct_c{hi}": rec_hi.get("construct_sec"),
             f"construct_c{lo}": rec_lo.get("construct_sec"),
             "ratio_lo_over_hi": round(rec_lo["median"] / rec_hi["median"], 2),
-            f"cpu_probe_c{hi}": (rec_hi.get("calibration") or {}).get("cpu_sec"),
-            f"cpu_probe_c{lo}": (rec_lo.get("calibration") or {}).get("cpu_sec"),
         }
         out[name] = row
         print(json.dumps({name: row}), flush=True)

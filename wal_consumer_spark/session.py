@@ -49,14 +49,20 @@ def driver_memory(phys_bytes: int) -> str:
     return f"{min(16, max(1, int(phys_bytes * 0.6) // 2**30))}g"
 
 
+def default_master() -> str:
+    """`local[$SPARK_GRAFT_CPUS]`, else one task slot per CPU this
+    process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "wal-consumer-spark",
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = default_master()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
